@@ -4,7 +4,9 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Execution is forced with the noop sink (full computation, zero
 collect/serialization cost on the driver), so timings measure the
-distributed plan, not result transfer.
+distributed plan, not result transfer.  The untimed warm pass also
+fills the operators' pinned tables, so the timed pass reads them
+from cache.
 """
 
 from __future__ import annotations
@@ -29,12 +31,12 @@ def main() -> None:
     # (370.9s vs 341.7s — SCALING.md round-9; larger readings that
     # night were host oscillation, not the heap).  A production
     # deployment sizes executor memory for the working set, so the
-    # bench does too.  Env-overridable, set before the JVM launches
-    # (get_spark reads it at builder time).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", "16g")
+    # bench does too, up to 60 % of the host's memory.  Env-overridable,
+    # set before the JVM launches (get_spark reads it at builder time).
+    from week4_musemotion_spark.session import default_driver_memory, get_spark
 
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", default_driver_memory())
     from week4_musemotion_spark.queries import REGISTRY
-    from week4_musemotion_spark.session import get_spark
 
     spark = get_spark("bench")
 

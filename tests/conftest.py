@@ -21,30 +21,49 @@ def spark():
     spark.stop()
 
 
-def staged_oracle(sql: str, tables: tuple[str, ...]) -> "pandas.DataFrame":  # noqa: F821
-    """DuckDB oracle run for a staged (not-yet-registered) query:
-    views over the smoke-SF parquet tables, one connection per call."""
+#: Every testdata table; DuckDB views are lazy, so an oracle reads only
+#: the tables its SQL names.
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+@pytest.fixture(scope="session")
+def musemotion_csv(tmp_path_factory) -> str:
+    """Headerless MuseMotion CSV in the reference's layout (11 named +
+    4 junk fields): 1,500 seeded dirty records from
+    ``perfbench.datagen``, so the ETL and dashboard tests need no
+    reference data."""
+    from perfbench.datagen import musemotion_rows, write_csv
+
+    path = str(tmp_path_factory.mktemp("musemotion") / "musemotion.csv")
+    write_csv(path, musemotion_rows(seed=7, n=1500))
+    return path
+
+
+def duckdb_oracle(sql: str) -> "pandas.DataFrame":  # noqa: F821
+    """DuckDB answer for ``sql`` over views of the smoke-SF parquet
+    tables, one connection per call."""
     import duckdb
 
     con = duckdb.connect()
-    for t in tables:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
     return con.execute(sql).fetchdf()
 
 
-def staged_diff(spark, name: str, tables: tuple[str, ...]):
-    """Spark-vs-DuckDB differential for a staged registry query:
-    same column set, same row count, order-insensitive value
-    equality.  Returns the Spark result for extra asserts.  The
-    staged module must already be imported (registration side
-    effect)."""
+def oracle_diff(spark, name: str):
+    """Spark-vs-DuckDB differential for a registry query at the smoke
+    SF: same column set, same row count, order-insensitive value
+    equality.  Returns the Spark result for extra asserts."""
     import pandas as pd
 
-    from week4_musemotion_spark.queries.registry import REGISTRY
+    from week4_musemotion_spark.queries import REGISTRY
 
     spec = REGISTRY[name]
     got = spec.builder(spark, SF_SMOKE).toPandas()
-    want = staged_oracle(spec.oracle, tables)
+    want = duckdb_oracle(spec.oracle)
     assert sorted(got.columns) == sorted(want.columns), (got.columns, want.columns)
     cols = sorted(got.columns)
     g = got[cols].sort_values(cols).reset_index(drop=True)

@@ -225,6 +225,26 @@ def test_star_contraction_equals_propagation(spark):
         assert s_star["rounds"] <= s_jump["rounds"] + 1, (name, s_star, s_jump)
 
 
+def test_cc_stats_count_only_the_rounds_returned(spark):
+    """On a 4-node chain both CC variants stop changing after round 2,
+    so round 3 confirms the fixed point — the FIRST round of a
+    two-round batch.  Each returns round 3's result, and ``stats``
+    must say 3 rounds (one star edge count per round), not the 4
+    rounds the batch executed."""
+    from week4_musemotion_spark.operators.graph import (
+        connected_components,
+        connected_components_star,
+    )
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["doc_a", "doc_b"])
+    s_jump, s_star = {}, {}
+    jump = sorted(map(tuple, connected_components(edges, stats=s_jump).collect()))
+    star = sorted(map(tuple, connected_components_star(edges, stats=s_star).collect()))
+    assert jump == star == [(n, 0) for n in range(4)]
+    assert s_jump == {"rounds": 3}, s_jump
+    assert s_star == {"rounds": 3, "edges": [3, 3, 3]}, s_star
+
+
 def test_embed_media_feeds_similarity_operators(spark):
     """The stub encoder's output must plug into the similarity
     operators unchanged: fixed dim, float64, exact thousandths in

@@ -21,7 +21,8 @@ _SF = "/root/testdata/sf0.01"
 
 #: Canaries by plan family: broadcast top-k join, banded near-dup
 #: join, sketch+verify aggregate, scaled semantic dedup, window
-#: battery, pure scan-agg, CC clustering, bucketed set-join.
+#: battery, pure scan-agg, CC clustering, bucketed set-join, winnowing
+#: print join.
 _CANARIES = (
     "q_cte_topk_join",
     "q_dedup_minhash",
@@ -31,9 +32,6 @@ _CANARIES = (
     "q_text_quality",
     "q_dedup_clusters",
     "q_jaccard_simjoin",
-    # staged-wave canary: snapshotted via audit_plans --staged, so a
-    # plan pathology in a not-yet-activated wave fails pytest at
-    # build time, not at activation time
     "q_winnow_pairs",
 )
 
@@ -49,10 +47,8 @@ def _latest_snapshot() -> dict:
 
 def test_canary_plan_shapes_match_snapshot(spark):
     from week4_musemotion_spark.plans.audit import plan_string
-    from week4_musemotion_spark.queries import REGISTRY, import_staged
+    from week4_musemotion_spark.queries import REGISTRY
     from tools.audit_plans import plan_metrics
-
-    import_staged()  # registers staged canaries (all waves, not just one chain)
 
     snap = _latest_snapshot()
     mismatches = {}

@@ -95,7 +95,7 @@ def _perceptron_sql(iters: int = _ITERS, pos=_POS, d: int = 64) -> str:
     (the coreset-oracle pattern: every chained CTE MATERIALIZED so
     the prefix is not re-evaluated per reference).  Returns one row
     per iteration: (iter, n_err, w) with w a pos-ordered list —
-    ready to lift into a staged r23 registry query."""
+    ready to lift into a registry query."""
     parts = [
         f"WITH q AS MATERIALIZED (SELECT vec_id,"
         f" CASE WHEN label = {pos} THEN 1 ELSE -1 END AS y,"

@@ -194,6 +194,22 @@ def test_bloom_prune_empty_keys_prunes_everything(spark):
     assert bloom_prune(li, none, "l_partkey", "p_partkey").count() == 0
 
 
+def test_bloom_prune_rejects_non_integral_keys(spark):
+    """A string key would cast to NULL and pass every fact row; the
+    operator must refuse it on either side instead."""
+    import pytest as _pytest
+
+    from week4_musemotion_spark.operators.sketches import bloom_prune
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    keys = spark.createDataFrame([("1",), ("2",)], "p_partkey string")
+    with _pytest.raises(ValueError, match="integral"):
+        bloom_prune(li, keys, "l_partkey", "p_partkey")
+    skeys = li.select(F.col("l_partkey").cast("string").alias("l_partkey"))
+    with _pytest.raises(ValueError, match="integral"):
+        bloom_prune(skeys, li.select("l_partkey"), "l_partkey")
+
+
 def test_bloom_membership_is_scan_side_predicate(spark):
     """The membership test must be a plain Filter on the fact scan —
     BELOW any exchange — or the 100 TB story (prune before shuffle)

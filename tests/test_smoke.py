@@ -26,6 +26,21 @@ def test_registry_contract(spark):
         assert sql.strip(), name
 
 
+def test_every_query_module_registers_on_package_import():
+    """Importing every module under ``queries/`` adds no name to
+    REGISTRY: a query exists only if the package import registers it,
+    so no unregistered query code can hide in the package."""
+    import importlib
+    import pkgutil
+
+    from week4_musemotion_spark import queries
+
+    before = set(queries.REGISTRY)
+    for info in pkgutil.iter_modules(queries.__path__):
+        importlib.import_module(f"{queries.__name__}.{info.name}")
+    assert set(queries.REGISTRY) == before, sorted(set(queries.REGISTRY) - before)
+
+
 def test_all_queries_run_at_smoke_sf(spark):
     import __spark_entry__ as mod
 

@@ -1,22 +1,16 @@
-"""Round-12 staged queries (queries/staged_r12.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+sketch-audit, drift-audit, curation, event-time, dedup/provenance
+queries (``queries/sketch_audits.py``, ``queries/behavior.py``,
+``queries/curation.py``, ``queries/temporal.py``,
+``queries/provenance.py``)."""
 
 from __future__ import annotations
 
-import pytest
-
-from tests.conftest import staged_diff
-
-
-def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r12  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+from tests.conftest import oracle_diff
 
 
 def test_len_quantiles_matches_oracle_and_brackets_truth(spark):
-    got = _diff(spark, "q_len_quantiles", ("documents",))
+    got = oracle_diff(spark, "q_len_quantiles")
     assert (got.p50 <= got.p90).all() and (got.p90 <= got.p99).all()
     # sketch contract: each read is a lower bound on the true
     # quantile and within 25% relative of it
@@ -37,13 +31,13 @@ def test_len_quantiles_matches_oracle_and_brackets_truth(spark):
 
 
 def test_embed_norm_quantiles_matches_oracle(spark):
-    got = _diff(spark, "q_embed_norm_quantiles", ("embeddings",))
+    got = oracle_diff(spark, "q_embed_norm_quantiles")
     assert (got.p50 <= got.p90).all() and (got.p90 <= got.p99).all()
     assert (got.n > 0).all()
 
 
 def test_tv_distance_matches_oracle_and_bounds(spark):
-    got = _diff(spark, "q_tv_distance_sources", ("documents",))
+    got = oracle_diff(spark, "q_tv_distance_sources")
     # TV in [0, 1e6]; a pair spine covers every unordered source pair
     assert got.tv_e6.between(0, 1_000_000).all()
     n_src = len(set(got.src_a) | set(got.src_b))
@@ -53,7 +47,7 @@ def test_tv_distance_matches_oracle_and_bounds(spark):
 
 
 def test_repetition_simpson_matches_oracle(spark):
-    got = _diff(spark, "q_repetition_simpson", ("documents",))
+    got = oracle_diff(spark, "q_repetition_simpson")
     assert got.micro_e6.between(0, 1_000_000).all()
     assert (got.max_doc_e6 >= got.micro_e6).all()
     assert got.worst_doc_id.notna().all()
@@ -64,7 +58,6 @@ def test_repetition_simpson_flags_planted_degenerate_doc(spark):
     # simpson = 1e6 exactly (any two draws collide)
     import pandas as pd
 
-    from week4_musemotion_spark.queries import staged_r12  # noqa: F401
 
     rows = [(i, "alpha beta gamma delta epsilon zeta", "en", "clean", 1) for i in range(20)]
     rows.append((99, " ".join(["loop"] * 50), "en", "degen", 1))
@@ -93,7 +86,7 @@ def test_repetition_simpson_flags_planted_degenerate_doc(spark):
 
 
 def test_watermark_audit_matches_oracle_and_grid_semantics(spark):
-    got = _diff(spark, "q_watermark_audit", ("events",))
+    got = oracle_diff(spark, "q_watermark_audit")
     # lateness must be monotone non-increasing in the delay, and the
     # 4h row must be exactly zero (lateness is bounded by the 4h
     # jitter span)
@@ -107,7 +100,7 @@ def test_watermark_audit_matches_oracle_and_grid_semantics(spark):
 
 
 def test_gap_histogram_matches_oracle(spark):
-    got = _diff(spark, "q_gap_histogram", ("events",))
+    got = oracle_diff(spark, "q_gap_histogram")
     g = got.sort_values("bucket")
     assert (g.lb_s <= g.ub_s).all()
     assert g.cum_ppm.is_monotonic_increasing
@@ -116,7 +109,7 @@ def test_gap_histogram_matches_oracle(spark):
 
 
 def test_band_tune_matches_oracle_and_dominance(spark):
-    got = _diff(spark, "q_band_tune", ("documents",))
+    got = oracle_diff(spark, "q_band_tune")
     assert len(got) == 4
     assert (got.n_true_hit <= got.n_true).all()
     assert (got.n_sub_hit <= got.n_sub).all()

@@ -1,18 +1,12 @@
-"""Round-13 staged queries (queries/staged_r13.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+sketch-audit, embedding-compression/ANN queries
+(``queries/sketch_audits.py``, ``queries/ann.py``)."""
 
 from __future__ import annotations
 
 import os
 
-from tests.conftest import staged_diff
-
-
-def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r13  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+from tests.conftest import oracle_diff
 
 
 def test_stream_len_quantiles_matches_batch_oracle(spark):
@@ -20,7 +14,7 @@ def test_stream_len_quantiles_matches_batch_oracle(spark):
     # digit: this single diff pins sketch math + marker protocol +
     # mid-stream compaction at once (the fixture replays batch 1 and
     # compacts after batch 3)
-    got = _diff(spark, "q_stream_len_quantiles", ("documents",))
+    got = oracle_diff(spark, "q_stream_len_quantiles")
     assert (got.p50 <= got.p90).all() and (got.p90 <= got.p99).all()
     assert (got.n > 0).all()
 
@@ -65,7 +59,7 @@ def test_qsketch_store_replay_and_torn_files_are_exactly_once(spark, tmp_path):
 
 
 def test_len_quantiles_exact_matches_oracle_and_bounds_sketch(spark):
-    got = _diff(spark, "q_len_quantiles_exact", ("documents",))
+    got = oracle_diff(spark, "q_len_quantiles_exact")
     assert (got.p50 <= got.p90).all() and (got.p90 <= got.p99).all()
     # the sketch's lower-bound contract against the exact twin:
     # sketch_p <= exact_p and within a quarter octave (lb > 3/4 * p)
@@ -80,39 +74,13 @@ def test_len_quantiles_exact_matches_oracle_and_bounds_sketch(spark):
 
 
 def test_price_quantiles_nation_matches_oracle(spark):
-    got = _diff(spark, "q_price_quantiles_nation", ("orders", "customer", "nation"))
+    got = oracle_diff(spark, "q_price_quantiles_nation")
     assert (got.p50 <= got.p90).all() and (got.p90 <= got.p99).all()
     assert len(got) == 25  # every nation has orders at every SF
 
 
-def test_fd_violations_matches_oracle_and_semantics(spark):
-    got = _diff(spark, "q_fd_violations", ("documents",))
-    assert len(got) == 3
-    assert (got.n_violations <= got.n_rows).all()
-    assert got.violation_ppm.between(0, 1_000_000).all()
-    # a determinant with a single value per group would read 0; this
-    # corpus' lang/source are near-independent, so rates must be high
-    ind = got[got.fd == "lang->source"].iloc[0]
-    assert ind.violation_ppm > 500_000  # far from a functional dependency
-
-
-def test_fd_violations_detects_a_planted_exact_fd(spark):
-    # plant an exact FD (lang -> source) and assert 0 violations
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from week4_musemotion_spark.functions.exact import dec, int_div_trunc
-
-    rows = [(i, f"l{i%3}", f"s{i%3}") for i in range(30)]  # lang determines source
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "lang", "source"]))
-    c = df.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("cnt"))
-    per = c.groupBy("lang").agg(F.sum("cnt").alias("tot"), F.max("cnt").alias("mx"))
-    viol = per.agg(F.sum(F.col("tot") - F.col("mx")).alias("v")).collect()[0].v
-    assert viol == 0
-
-
 def test_pq_distortion_matches_oracle_and_fitted_beats_it(spark):
-    got = _diff(spark, "q_pq_distortion", ("embeddings",))
+    got = oracle_diff(spark, "q_pq_distortion")
     assert len(got) == 4 and (got.err_e6_total > 0).all()
     # the Lloyd-fitted model must beat the seed baseline per corpus
     from tests.test_pq import _distortion, _emb
@@ -125,7 +93,7 @@ def test_pq_distortion_matches_oracle_and_fitted_beats_it(spark):
 
 
 def test_pq_collisions_matches_oracle_and_accounting(spark):
-    got = _diff(spark, "q_pq_collisions", ("embeddings",))
+    got = oracle_diff(spark, "q_pq_collisions")
     # block accounting: sizes x groups = vectors; pairs = C(size, 2)
     assert (got.group_size * got.n_groups == got.n_vecs).all()
     assert (

@@ -1,21 +1,14 @@
-"""Round-19 staged queries (queries/staged_r19.py — not yet imported
-by queries/__init__): Spark-vs-DuckDB differential + semantics for
-the data-selection layer (coreset report, dispersion audit) and the
-CSV dead-letter twin."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+curation, semantic-similarity queries (``queries/curation.py``,
+``queries/semantic.py``)."""
 
 from __future__ import annotations
 
-from tests.conftest import staged_diff
-
-
-def _diff(spark, name, tables):
-    from week4_musemotion_spark.queries import staged_r19  # noqa: F401 — registers
-
-    return staged_diff(spark, name, tables)
+from tests.conftest import oracle_diff
 
 
 def test_coreset_report_matches_unrolled_oracle(spark):
-    got = _diff(spark, "q_coreset_report", ("embeddings",))
+    got = oracle_diff(spark, "q_coreset_report")
     assert len(got) == 6
     # round 0 is the min-id seed with no radius
     seed = got[got["round"] == 0].iloc[0]
@@ -34,24 +27,10 @@ def test_coreset_report_matches_unrolled_oracle(spark):
 
 
 def test_embed_dispersion_matches_closed_form_oracle(spark):
-    got = _diff(spark, "q_embed_dispersion", ("embeddings",))
+    got = oracle_diff(spark, "q_embed_dispersion")
     # every label group has >1 member at sf0.001 -> msd defined
     assert got.msd_e6.notna().all()
     assert (got.n > 1).all()
     # pairs/ssd ride as digit strings (exactness contract)
     assert got.pairs.map(lambda s: isinstance(s, str)).all()
     assert got.ssd.map(lambda s: isinstance(s, str)).all()
-
-
-def test_csv_quarantine_split_matches_oracle_and_loses_nothing(spark):
-    import duckdb
-
-    from tests.conftest import SF_SMOKE
-
-    got = _diff(spark, "q_csv_quarantine_split", ("documents",))
-    total = duckdb.sql(
-        f"SELECT count(*) FROM '{SF_SMOKE}/documents.parquet'"
-    ).fetchone()[0]
-    n_bad = int(got.n_bad.iloc[0])
-    assert n_bad > 0  # the plant really landed
-    assert int(got.n_clean.sum()) + n_bad == total  # zero loss

@@ -1,25 +1,17 @@
-"""Round-7 staged queries (queries/staged_r7.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential check here,
-so round 7 can register them with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+dedup/provenance, text-distribution, embedding-compression/ANN
+queries (``queries/provenance.py``, ``queries/textmix.py``,
+``queries/ann.py``)."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE, staged_diff
-
-TABLES = ("documents", "embeddings")
-
-
-def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+from tests.conftest import SF_SMOKE, oracle_diff
 
 
 def test_minhash_fidelity_matches_oracle(spark):
-    got = _diff(spark, "q_minhash_fidelity")
+    got = oracle_diff(spark, "q_minhash_fidelity")
     assert len(got) > 0, "fixture corpus must contain near-dup pairs"
     # high-Jaccard pairs must agree on most signatures
     hi = got[got.jaccard_e4 >= 9000]
@@ -28,7 +20,7 @@ def test_minhash_fidelity_matches_oracle(spark):
 
 
 def test_dedup_threshold_sweep_matches_oracle(spark):
-    got = _diff(spark, "q_dedup_threshold_sweep")
+    got = oracle_diff(spark, "q_dedup_threshold_sweep")
     assert len(got) == 5, "one row per grid threshold, even empty ones"
     s = got.sort_values("thr_e4")
     assert (s.n_pairs.diff().dropna() <= 0).all(), "pair count monotone in threshold"
@@ -36,7 +28,7 @@ def test_dedup_threshold_sweep_matches_oracle(spark):
 
 
 def test_stopword_density_matches_oracle(spark):
-    got = _diff(spark, "q_stopword_density_by_source")
+    got = oracle_diff(spark, "q_stopword_density_by_source")
     assert got.hh_ppm.between(0, 1_000_000).all()
     assert (got.n_hh <= got.n_tokens).all()
 
@@ -45,7 +37,6 @@ def test_embedding_whiten_shape(spark):
     # Driver contract: output must be SCALAR-typed even for rows-only
     # queries (the driver's canonicalizer pandas-sorts every column;
     # array<double> output was round 7's one red driver row).
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     df = REGISTRY["q_embedding_whiten"].builder(spark, SF_SMOKE)
@@ -66,7 +57,7 @@ def test_embedding_whiten_shape(spark):
 
 
 def test_dup_inflation_matches_oracle(spark):
-    got = _diff(spark, "q_dup_inflation")
+    got = oracle_diff(spark, "q_dup_inflation")
     assert len(got) == 20, "one row per source"
     assert (got.chars_dropped <= got.chars_total).all()
     assert (got.n_dropped <= got.n_docs).all()
@@ -74,7 +65,6 @@ def test_dup_inflation_matches_oracle(spark):
 
 
 def test_ann_recall_report(spark):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
     spec = REGISTRY["q_ann_recall_report"]

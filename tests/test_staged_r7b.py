@@ -1,22 +1,14 @@
-"""Second staged wave (queries/staged_r7.py additions — not yet
-imported by queries/__init__): full Spark-vs-DuckDB differential
-checks here, so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+sketch-audit, dedup/provenance queries
+(``queries/sketch_audits.py``, ``queries/provenance.py``)."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE, staged_diff
-
-TABLES = ("documents", "embeddings", "lineitem", "part", "supplier")
-
-
-def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r7  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+from tests.conftest import SF_SMOKE, oracle_diff
 
 
 def test_distinct_sketch_matches_oracle(spark):
-    got = _diff(spark, "q_distinct_sketch")
+    got = oracle_diff(spark, "q_distinct_sketch")
     assert len(got) == 20, "one row per source"
     # raw-regime guard: every source's cardinality must clear 2.5m,
     # or the query's no-linear-counting design assumption broke
@@ -27,13 +19,13 @@ def test_distinct_sketch_matches_oracle(spark):
 
 
 def test_bloom_pruned_join_matches_oracle(spark):
-    got = _diff(spark, "q_bloom_pruned_join")
+    got = oracle_diff(spark, "q_bloom_pruned_join")
     assert len(got) > 0 and (got.n_items > 0).all()
     assert (got.revenue_e4 > 0).all()
 
 
 def test_leakage_split_matches_oracle(spark):
-    got = _diff(spark, "q_leakage_split")
+    got = oracle_diff(spark, "q_leakage_split")
     assert set(got.split) <= {"train", "val", "test"}
     assert (got.straddle_pairs == 0).all(), "near-dup pair crossed a split"
     assert got.n_docs.sum() == 500, "every document assigned exactly once"

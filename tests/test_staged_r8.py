@@ -1,22 +1,16 @@
-"""Round-8 staged queries (queries/staged_r8.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+dedup/provenance, sketch-audit, semantic-similarity,
+embedding-compression/ANN queries (``queries/provenance.py``,
+``queries/sketch_audits.py``, ``queries/semantic.py``,
+``queries/ann.py``)."""
 
 from __future__ import annotations
 
-from tests.conftest import staged_diff
-
-TABLES = ("documents", "lineitem", "part", "events", "embeddings")
-
-
-def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r8  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+from tests.conftest import oracle_diff
 
 
 def test_dup_span_coverage_matches_oracle(spark):
-    got = _diff(spark, "q_dup_span_coverage")
+    got = oracle_diff(spark, "q_dup_span_coverage")
     assert len(got) == 20, "one row per source"
     assert (got.dup_spans <= got.n_spans).all()
     assert got.coverage_ppm.between(0, 1_000_000).all()
@@ -25,7 +19,7 @@ def test_dup_span_coverage_matches_oracle(spark):
 
 
 def test_bloom_fp_audit_matches_oracle(spark):
-    got = _diff(spark, "q_bloom_fp_audit")
+    got = oracle_diff(spark, "q_bloom_fp_audit")
     assert (got.outcome != "lost_true_key").all(), "bloom dropped a true key"
     small, big = got[got.num_bits == 64], got[got.num_bits == 32768]
     # saturated end exhibits FPs; provisioned end actually prunes
@@ -41,7 +35,7 @@ def test_bloom_fp_audit_matches_oracle(spark):
 
 
 def test_source_overlap_sketch_matches_oracle(spark):
-    got = _diff(spark, "q_source_overlap_sketch")
+    got = oracle_diff(spark, "q_source_overlap_sketch")
     assert len(got) == 190, "all unordered source pairs"
     # the pointwise register max guarantees union >= each part
     # EXACTLY (smaller harmonic denominator); <= a+b is NOT an
@@ -54,7 +48,7 @@ def test_source_overlap_sketch_matches_oracle(spark):
 
 
 def test_cms_point_error_matches_oracle(spark):
-    got = _diff(spark, "q_cms_point_error")
+    got = oracle_diff(spark, "q_cms_point_error")
     assert len(got) == 60, "top-20 terms x 3 grid widths"
     # CMS one-sided guarantee, visible in the audit itself
     assert (got.cms_est >= got.exact_cnt).all()
@@ -69,14 +63,14 @@ def test_cms_point_error_matches_oracle(spark):
 
 
 def test_stream_distinct_report_matches_oracle(spark):
-    got = _diff(spark, "q_stream_distinct_report")
+    got = oracle_diff(spark, "q_stream_distinct_report")
     assert len(got) == 5, "one row per event type"
     assert set(got.regime) <= {"raw", "linear-counting"}
     assert got.zero_regs.between(0, 256).all()
 
 
 def test_semantic_threshold_sweep_matches_oracle(spark):
-    got = _diff(spark, "q_semantic_threshold_sweep")
+    got = oracle_diff(spark, "q_semantic_threshold_sweep")
     assert len(got) == 4, "one row per grid threshold, even empty ones"
     s = got.sort_values("thr_e6")
     assert (s.n_pairs.diff().dropna() <= 0).all(), "pair count monotone in threshold"
@@ -85,7 +79,7 @@ def test_semantic_threshold_sweep_matches_oracle(spark):
 
 
 def test_hll_fold_grid_matches_oracle(spark):
-    got = _diff(spark, "q_hll_fold_grid")
+    got = oracle_diff(spark, "q_hll_fold_grid")
     assert len(got) == 60, "20 sources x 3 grid precisions"
     # the fold contract: register-exact, therefore estimate-exact
     assert (got.reg_mismatch == 0).all()
@@ -93,7 +87,7 @@ def test_hll_fold_grid_matches_oracle(spark):
 
 
 def test_rp_distortion_matches_oracle(spark):
-    got = _diff(spark, "q_rp_distortion")
+    got = oracle_diff(spark, "q_rp_distortion")
     assert len(got) == 3, "one row per grid dim"
     s = got.set_index("t")
     # every vector participates in the norm audit (corpus has no

@@ -1,22 +1,14 @@
-"""Round-9 staged queries (queries/staged_r9.py — not yet imported
-by queries/__init__): full Spark-vs-DuckDB differential checks here,
-so activation ships with evidence already in hand."""
+"""Spark-vs-DuckDB differentials at sf0.001 and semantic invariants for
+dedup/provenance, drift-audit queries (``queries/provenance.py``,
+``queries/behavior.py``)."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE as SF, staged_diff
-
-TABLES = ("documents", "events")
-
-
-def _diff(spark, name):
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401 — registers
-
-    return staged_diff(spark, name, TABLES)
+from tests.conftest import SF_SMOKE, oracle_diff
 
 
 def test_winnow_density_matches_oracle(spark):
-    got = _diff(spark, "q_winnow_density")
+    got = oracle_diff(spark, "q_winnow_density")
     assert len(got) == 20, "one row per source"
     assert (got.n_prints <= got.n_grams).all()
     # Schleimer et al. density bound: expected 2/(w+1) for random
@@ -38,16 +30,16 @@ def test_winnow_matches_pure_python_reference(spark):
 
     from pyspark.sql import functions as F
 
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401
+    from week4_musemotion_spark.queries import provenance
 
     got = {
         r["doc_id"]: (r["n_grams"], r["n_prints"])
-        for r in staged_r9._winnow_selected(spark, SF)
+        for r in provenance._winnow_selected(spark, SF_SMOKE)
         .groupBy("doc_id")
         .agg(
             (F.max("pos") + 1).alias("n_grams"),
             F.countDistinct(
-                F.when(F.col("pos") >= staged_r9._WW - 1, F.col("selkey"))
+                F.when(F.col("pos") >= provenance._WW - 1, F.col("selkey"))
             ).alias("n_prints"),
         )
         .collect()
@@ -55,8 +47,8 @@ def test_winnow_matches_pure_python_reference(spark):
 
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(f"{SF}/documents.parquet", columns=["doc_id", "text"])
-    k, w = staged_r9._WK, staged_r9._WW
+    tbl = pq.read_table(f"{SF_SMOKE}/documents.parquet", columns=["doc_id", "text"])
+    k, w = provenance._WK, provenance._WW
     for doc_id, text in zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()):
         toks = [t for t in re.split(r"\s+", text) if t]
         grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
@@ -84,15 +76,14 @@ def test_winnow_position_guard_survives_catalyst(spark):
     # (F.assert_true lowers to raise_error; Catalyst prunes it unless
     # it rides a used expression — verify-skill round-6 note)
     from week4_musemotion_spark.plans.audit import plan_string
-    from week4_musemotion_spark.queries import staged_r9  # noqa: F401
     from week4_musemotion_spark.queries.registry import REGISTRY
 
-    df = REGISTRY["q_winnow_density"].builder(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["q_winnow_density"].builder(spark, SF_SMOKE)
     assert "raise_error" in plan_string(df, "simple")
 
 
 def test_winnow_pairs_matches_oracle(spark):
-    got = _diff(spark, "q_winnow_pairs")
+    got = oracle_diff(spark, "q_winnow_pairs")
     assert len(got) > 0, "planted near-dups must share winnowed prints"
     assert (got.containment_ppm <= 1_000_000).all()
     assert (got.shared_prints <= got[["na_prints", "nb_prints"]].min(axis=1)).all()
@@ -101,7 +92,7 @@ def test_winnow_pairs_matches_oracle(spark):
 
 
 def test_substring_runs_matches_oracle(spark):
-    got = _diff(spark, "q_substring_runs")
+    got = oracle_diff(spark, "q_substring_runs")
     assert len(got) > 0, "planted near-dups carry long shared runs"
     # run length is grams + n - 1 >= n + 1 by the 2-gram minimum
     assert (got.longest_run_tokens >= 9).all()
@@ -111,7 +102,7 @@ def test_substring_runs_matches_oracle(spark):
 
 
 def test_detector_agreement_matches_oracle(spark):
-    got = _diff(spark, "q_detector_agreement")
+    got = oracle_diff(spark, "q_detector_agreement")
     assert len(got) == 1
     r = got.iloc[0]
     assert r.n_pairs == r.n_docs * (r.n_docs - 1) // 2
@@ -132,14 +123,14 @@ def test_detector_agreement_matches_oracle(spark):
 
 
 def test_dedup_simhash_ngram_matches_oracle(spark):
-    got = _diff(spark, "q_dedup_simhash_ngram")
+    got = oracle_diff(spark, "q_dedup_simhash_ngram")
     assert len(got) > 0, "planted near-dups must land within Hamming 4"
     assert (got.hamming <= 4).all()
     assert (got.doc_a < got.doc_b).all()
 
 
 def test_detector_agreement_ngram_matches_oracle(spark):
-    got = _diff(spark, "q_detector_agreement_ngram")
+    got = oracle_diff(spark, "q_detector_agreement_ngram")
     r = got.iloc[0]
     assert r.n_pairs == r.n_docs * (r.n_docs - 1) // 2
     # the feature-space fix: shingle-space SimHash agrees strongly
@@ -153,13 +144,13 @@ def test_detector_agreement_ngram_matches_oracle(spark):
 
 
 def test_provenance_bits_matches_oracle(spark):
-    got = _diff(spark, "q_provenance_bits")
+    got = oracle_diff(spark, "q_provenance_bits")
     assert (got.n_sources >= 1).all()
     assert (got.n_docs >= got.n_groups).all()
     # every doc lands in exactly one mask bucket (sf0.001 documents
     # has 500 rows, all unique text -> single-bit masks only; the
     # multi-bit cross-source path is exercised at sf0.1, which ships
-    # 8 two-source exact-dup groups — covered by the manual per-SF
+    # 8 two-source exact-dup groups — covered by the manual per-SF_SMOKE
     # differential run)
     assert got.n_docs.sum() == 500
     # single-source masks are powers of two
@@ -168,7 +159,7 @@ def test_provenance_bits_matches_oracle(spark):
 
 
 def test_dup_cluster_purity_matches_oracle(spark):
-    got = _diff(spark, "q_dup_cluster_purity")
+    got = oracle_diff(spark, "q_dup_cluster_purity")
     assert len(got) > 0, "planted near-dup clusters exist"
     assert (got["size"] >= 2).all(), "clusters are >=2 docs by construction"
     assert (got.purity_ppm <= 1_000_000).all()
@@ -181,7 +172,7 @@ def test_dup_cluster_purity_matches_oracle(spark):
 
 
 def test_dup_quality_bias_matches_oracle(spark):
-    got = _diff(spark, "q_dup_quality_bias")
+    got = oracle_diff(spark, "q_dup_quality_bias")
     # every source appears; is_dup in {0, 1}
     assert set(got.is_dup.unique()) <= {0, 1}
     assert got.n_docs.sum() == 500  # every sf0.001 doc in exactly one cell
@@ -192,7 +183,7 @@ def test_dup_quality_bias_matches_oracle(spark):
 
 
 def test_cusum_drift_matches_oracle(spark):
-    got = _diff(spark, "q_cusum_drift")
+    got = oracle_diff(spark, "q_cusum_drift")
     assert len(got) > 0, "one row per event_type"
     assert (got.s_max >= 0).all() and (got.s_min <= 0).all(), "cusum sums to 0"
     assert (got.drift_range == got.s_max - got.s_min).all()

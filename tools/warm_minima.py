@@ -29,12 +29,16 @@ def main() -> int:
         reps = int(args[i + 1])
         del args[i : i + 2]
     sf_dir = "/root/testdata/sf0.1"
+    dir_given = False
     names: list[str] = []
     for a in args:
         if a.startswith("q_"):
             names.append(a)
         elif os.path.isdir(a):
-            sf_dir = a
+            if dir_given:
+                print(f"error: two sf_dir arguments ({sf_dir!r}, {a!r})", file=sys.stderr)
+                return 2
+            sf_dir, dir_given = a, True
         else:
             # a mistyped sf_dir silently falling back to the default
             # would time the WRONG dataset — fail loudly instead
@@ -45,9 +49,10 @@ def main() -> int:
         return 2
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", "16g")
+    from week4_musemotion_spark.session import default_driver_memory, get_spark
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEMORY", default_driver_memory())
     from week4_musemotion_spark.queries import REGISTRY
-    from week4_musemotion_spark.session import get_spark
 
     spark = get_spark("warm-minima")
     out: dict[str, dict] = {}

@@ -104,7 +104,8 @@ def connected_components(
             # round-trips vs the one-job-per-round form.  Detection is
             # never late — round a's sum is compared against the
             # previous batch, so a fixed point reached at an odd round
-            # costs at most the one wasted round b.
+            # costs at most the one wasted round b, which ``stats``
+            # does not count.
             la = one_round(labels)
             rounds += 1
             if stats is not None:
@@ -123,6 +124,8 @@ def connected_components(
                 for r in comp_sum(la, 1).unionByName(comp_sum(lb, 2)).collect()
             }
             if sums[1] == prev_sum:
+                if stats is not None:
+                    stats["rounds"] = rounds - 1
                 return la
             if sums[2] == sums[1]:
                 return lb
@@ -203,7 +206,8 @@ def connected_components_star(
     # is lazily checkpointed (the round's plan references e several
     # times) and one blocking job materializes both rounds plus both
     # convergence signatures; detection of a fixed point reached at an
-    # odd round costs at most the one wasted even round.
+    # odd round costs at most the one wasted even round, which ``stats``
+    # does not count.
     prev = None
     rounds = 0
     converged = False
@@ -226,12 +230,16 @@ def connected_components_star(
         sig = {r.r: r for r in sig_of(ea, 1).unionByName(sig_of(eb, 2)).collect()}
         cur_a = (sig[1].n, sig[1].h)
         cur_b = (sig[2].n, sig[2].h)
-        if stats is not None:
-            stats.setdefault("edges", []).extend([sig[1].n, sig[2].n])
         if cur_a == prev:
             e = ea
             converged = True
-        elif cur_b == cur_a:
+            if stats is not None:
+                stats["rounds"] = rounds - 1
+                stats.setdefault("edges", []).append(sig[1].n)
+            break
+        if stats is not None:
+            stats.setdefault("edges", []).extend([sig[1].n, sig[2].n])
+        if cur_b == cur_a:
             e = eb
             converged = True
         else:

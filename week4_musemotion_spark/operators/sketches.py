@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 def approx_distinct_by(
@@ -615,7 +616,15 @@ def bloom_prune(
     0.1 s on a 600 k-row probe).  The oracle-replayed audits
     (q_bloom_fp_audit) keep :func:`bloom_positions` /
     :func:`bloom_might_contain`, whose portable positions a SQL
-    oracle reproduces bit-for-bit."""
+    oracle reproduces bit-for-bit.
+
+    Both key columns must be integral: the native family hashes
+    ``key.cast("long")``, which turns any other key into NULL and the
+    filter into a silent pass-all, so other types raise ValueError."""
+    for df, col in ((fact, fact_key), (keys, dim_key or fact_key)):
+        dtype = df.schema[col].dataType
+        if not isinstance(dtype, IntegralType):
+            raise ValueError(f"bloom_prune needs integral keys; {col!r} is {dtype.simpleString()}")
     pos = _fast_bloom_positions(keys, dim_key or fact_key, num_bits, num_hashes)
     w = bloom_words(pos, num_bits)
     return fact.filter(_fast_might_contain(F.col(fact_key), w, num_hashes))

@@ -20,9 +20,11 @@ from week4_musemotion_spark.functions.exact import (
     dec,
     int_div_round_dec,
     int_div_round_sql,
+    int_div_trunc,
     sum_money,
     sum_money_sql,
 )
+from week4_musemotion_spark.functions.eventtime import US_PER_DAY, epoch_micros
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
 
@@ -350,4 +352,303 @@ def q_halflife_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("c * shiftleft(CAST(1 AS BIGINT), 16 - j)"))
         .cast("long")
         .alias("decay_cents_x32768"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# CUSUM drift (exact integer changepoint statistic)
+# ---------------------------------------------------------------------------
+
+
+def _daily_dense_sql() -> str:
+    """CTE chain ``daily`` → ``span`` → ``grid`` → ``dense(event_type,
+    day_idx, cnt)``: per-type daily event counts densified over each
+    type's [min, max] day span so zero-event days carry cnt = 0 —
+    ONE definition shared by every daily-grid monitor (CUSUM,
+    seasonal residuals) so the grid semantics cannot drift.
+
+    Day bucketing truncates epoch-µs; both engines assume
+    NON-NEGATIVE epochs (int_div_trunc's p ≥ 0 contract — DuckDB
+    ``//`` truncates toward zero while the Spark helper is only
+    defined for p ≥ 0, so a pre-1970 timestamp would bucket
+    differently; the testdata contract is post-1970 event time)."""
+    return f"""daily AS (
+        SELECT event_type, epoch_us(ts) // {US_PER_DAY} AS day_idx,
+               count(*) AS cnt
+        FROM events GROUP BY 1, 2
+    ),
+    span AS (SELECT event_type, min(day_idx) AS d0, max(day_idx) AS d1
+             FROM daily GROUP BY event_type),
+    grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day_idx FROM span),
+    dense AS (
+        SELECT g.event_type, g.day_idx, coalesce(d.cnt, 0) AS cnt
+        FROM grid g LEFT JOIN daily d USING (event_type, day_idx)
+    )"""
+
+
+def _daily_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of :func:`_daily_dense_sql` — ``(event_type,
+    day_idx, cnt)`` densified per type.  The grid join is
+    |types|×|days| rows; both sides derive from the already-tiny
+    daily aggregate."""
+    e = load_table(spark, sf_dir, "events")
+    day = int_div_trunc(epoch_micros(e), F.lit(US_PER_DAY))
+    daily = e.groupBy("event_type", day.alias("day_idx")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    span = daily.groupBy("event_type").agg(
+        F.min("day_idx").alias("d0"), F.max("day_idx").alias("d1")
+    )
+    grid = span.select(
+        "event_type", F.explode(F.sequence("d0", "d1")).alias("day_idx")
+    )
+    return grid.join(daily, ["event_type", "day_idx"], "left").select(
+        "event_type", "day_idx", F.coalesce("cnt", F.lit(0)).alias("cnt")
+    )
+
+
+@query(
+    "q_cusum_drift",
+    covers=("X-CUSUM-DRIFT",),
+    oracle=f"""
+    WITH {_daily_dense_sql()},
+    t AS (
+        SELECT event_type, day_idx, cnt,
+               count(*) OVER (PARTITION BY event_type) AS nd,
+               sum(cnt) OVER (PARTITION BY event_type) AS total
+        FROM dense
+    ),
+    s AS (
+        SELECT event_type, day_idx, nd, total,
+               sum(cnt * nd - total) OVER (PARTITION BY event_type ORDER BY day_idx
+                                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cusum
+        FROM t
+    ),
+    agg AS (
+        SELECT event_type, CAST(min(nd) AS BIGINT) AS n_days,
+               CAST(min(total) AS BIGINT) AS total_events,
+               CAST(max(cusum) AS BIGINT) AS s_max, CAST(min(cusum) AS BIGINT) AS s_min,
+               max({{'c': cusum, 'nd': -day_idx}}) AS pk
+        FROM s GROUP BY event_type
+    )
+    SELECT event_type, n_days, total_events, s_max, s_min,
+           s_max - s_min AS drift_range,
+           CAST(-(pk.nd) AS BIGINT) AS peak_day_idx
+    FROM agg
+    """,
+)
+def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM changepoint statistic over daily event counts per type,
+    in exact integers: S_t = Σ(cnt_i·D − total) = D·prefix_t −
+    t·total (deviation from the mean scaled by the day count D, so no
+    fractional mean ever exists).  The peak day is where the
+    cumulative deviation tops out — the classic changepoint estimate
+    — and (s_max − s_min) is the drift range a monitor thresholds.
+
+    All window work happens on the |types|×|days| daily grid,
+    DENSIFIED over each type's [min, max] day span so zero-event
+    days carry cnt=0 (deviation −total per silent day — a full
+    dropout drives the CUSUM hard negative instead of being
+    compressed away; n_days is therefore the span length, not the
+    active-day count).  The grid is a few thousand rows at any scale
+    — the corpus shuffle is the grouped count, everything after is
+    negligible — and the peak day rides
+    the SAME single aggregate as the extrema via a struct-max
+    (max(cusum, −day) — lexicographic struct ordering in both
+    engines), so the corpus is scanned exactly once.  Ties on the
+    peak break to the earliest day, keeping the LIMIT-free output
+    fully deterministic."""
+    dense = _daily_dense(spark, sf_dir)
+    wt = Window.partitionBy("event_type")
+    t = dense.select(
+        "event_type",
+        "day_idx",
+        "cnt",
+        F.count(F.lit(1)).over(wt).alias("nd"),
+        F.sum("cnt").over(wt).alias("total"),
+    )
+    ws = wt.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    s = t.select(
+        "event_type",
+        "day_idx",
+        "nd",
+        "total",
+        F.sum(F.col("cnt") * F.col("nd") - F.col("total")).over(ws).alias("cusum"),
+    )
+    agg = s.groupBy("event_type").agg(
+        F.min("nd").cast("long").alias("n_days"),
+        F.min("total").cast("long").alias("total_events"),
+        F.max("cusum").cast("long").alias("s_max"),
+        F.min("cusum").cast("long").alias("s_min"),
+        F.max(
+            F.struct(F.col("cusum").alias("c"), (-F.col("day_idx")).alias("ndl"))
+        ).alias("pk"),
+    )
+    return agg.select(
+        "event_type",
+        "n_days",
+        "total_events",
+        "s_max",
+        "s_min",
+        (F.col("s_max") - F.col("s_min")).alias("drift_range"),
+        (-F.col("pk.ndl")).cast("long").alias("peak_day_idx"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Seasonal-naive residual drift
+# ---------------------------------------------------------------------------
+
+_SEASON = 7
+
+
+@query(
+    "q_seasonal_residuals",
+    covers=("X-SEASONAL-RESIDUALS",),
+    oracle=f"""
+    WITH {_daily_dense_sql()},
+    r AS (
+        SELECT event_type, day_idx, cnt,
+               cnt - lag(cnt, {_SEASON}) OVER (PARTITION BY event_type ORDER BY day_idx)
+                   AS resid
+        FROM dense
+    )
+    SELECT event_type,
+           CAST(count(resid) AS BIGINT) AS n_resid,
+           CAST(sum(abs(resid)) AS BIGINT) AS sum_abs_resid,
+           CAST(max(abs(resid)) AS BIGINT) AS max_abs_resid,
+           CAST(-(max({{'a': abs(resid), 'nd': -day_idx}}).nd) AS BIGINT) AS peak_day_idx
+    FROM r WHERE resid IS NOT NULL
+    GROUP BY event_type
+    """,
+)
+def q_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seasonal-naive residual drift per event type: today's count
+    minus the count {_SEASON} days earlier over the DENSIFIED daily
+    grid (missing days carry cnt = 0, so the lag is always exactly
+    {_SEASON} calendar days — a row-lag over a gappy grid would
+    silently compare across gaps).  The weekly-difference series is
+    the standard first monitor for traffic with day-of-week
+    structure: a level shift shows up once, a broken weekday pattern
+    shows up every day, and CUSUM-style level drift (q_cusum_drift)
+    stays quiet on pure pattern changes — run both.
+
+    All window work happens on the tiny |types|×|days| grid; the
+    corpus shuffle is the grouped count.  Peak day rides the same
+    aggregate via struct-max with earliest-day tie-break, exact
+    integers end to end."""
+    from pyspark.sql import Window
+
+    dense = _daily_dense(spark, sf_dir)
+    w = Window.partitionBy("event_type").orderBy("day_idx")
+    r = dense.select(
+        "event_type",
+        "day_idx",
+        (F.col("cnt") - F.lag("cnt", _SEASON).over(w)).alias("resid"),
+    ).filter(F.col("resid").isNotNull())
+    return r.groupBy("event_type").agg(
+        F.count("resid").cast("long").alias("n_resid"),
+        F.sum(F.abs("resid")).cast("long").alias("sum_abs_resid"),
+        F.max(F.abs("resid")).cast("long").alias("max_abs_resid"),
+        (-F.max(
+            F.struct(F.abs("resid").alias("a"), (-F.col("day_idx")).alias("nd"))
+        ).getField("nd")).cast("long").alias("peak_day_idx"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Source-distribution drift: total-variation distance
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_tv_distance_sources",
+    covers=("X-TV-DISTANCE",),
+    oracle="""
+    WITH tok AS (
+        SELECT source, unnest(list_filter(string_split_regex(text, '\\s+'), w -> w != '')) AS term
+        FROM documents
+    ),
+    c AS (SELECT source, term, count(*) AS cnt FROM tok GROUP BY 1, 2),
+    n AS (SELECT source, sum(cnt) AS n FROM c GROUP BY 1),
+    co AS (
+        SELECT a.source AS src_a, b.source AS src_b,
+               count(*) AS n_shared_terms,
+               sum(abs(CAST(a.cnt AS HUGEINT) * nb.n - CAST(b.cnt AS HUGEINT) * na.n)) AS s_abs,
+               sum(a.cnt) AS co_a, sum(b.cnt) AS co_b
+        FROM c a
+        JOIN c b ON a.term = b.term AND a.source < b.source
+        JOIN n na ON na.source = a.source
+        JOIN n nb ON nb.source = b.source
+        GROUP BY 1, 2
+    )
+    SELECT p.src_a, p.src_b,
+           CAST(COALESCE(co.n_shared_terms, 0) AS BIGINT) AS n_shared_terms,
+           CAST((COALESCE(co.s_abs, 0)
+                 + (na.n - COALESCE(co.co_a, 0)) * CAST(nb.n AS HUGEINT)
+                 + (nb.n - COALESCE(co.co_b, 0)) * CAST(na.n AS HUGEINT))
+                * 1000000 // (2 * CAST(na.n AS HUGEINT) * nb.n) AS BIGINT) AS tv_e6
+    FROM (SELECT a.source AS src_a, b.source AS src_b
+          FROM n a JOIN n b ON a.source < b.source) p
+    LEFT JOIN co ON co.src_a = p.src_a AND co.src_b = p.src_b
+    JOIN n na ON na.source = p.src_a
+    JOIN n nb ON nb.source = p.src_b
+    """,
+)
+def q_tv_distance_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise total-variation distance between source unigram
+    token distributions, exact to the e6 digit: TV(A,B) = ½ Σ_t
+    |p_A(t) − p_B(t)|, computed over the common denominator
+    n_A·n_B so no float division ever happens — terms absent from
+    one source contribute their full mass via the complement
+    arithmetic (n − Σ_co c), so the truncated vocabulary join stays
+    an INNER join.  0 = identical distribution, 1e6 = disjoint
+    vocabularies; the matrix is what a mixing planner reads to know
+    which sources actually diversify the mixture (near-0 rows are
+    redundant crawls) and what drift monitors diff across versions.
+
+    Scale shape: one token-count aggregate (map-side combined),
+    then the pair stage joins the count table with itself ON TERM —
+    per-term fanout is (sources present)² ≤ |sources|², so the join
+    is linear in vocabulary for a fixed source count, never in
+    corpus size; totals are a |sources|-row broadcast."""
+    d = load_table(spark, sf_dir, "documents")
+    from week4_musemotion_spark.functions.text import tokens
+
+    tok = d.select("source", F.explode(tokens(F.col("text"))).alias("term"))
+    c = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("cnt"))
+    c = c.localCheckpoint(eager=False)  # feeds totals AND both join sides
+    n = c.groupBy("source").agg(F.sum("cnt").alias("n"))
+    a = c.select(F.col("source").alias("src_a"), "term", F.col("cnt").alias("ca"))
+    b = c.select(F.col("source").alias("src_b"), "term", F.col("cnt").alias("cb"))
+    na = n.select(F.col("source").alias("src_a"), F.col("n").alias("na"))
+    nb = n.select(F.col("source").alias("src_b"), F.col("n").alias("nb"))
+    co = (
+        a.join(b, "term")
+        .filter(F.col("src_a") < F.col("src_b"))
+        .join(F.broadcast(na), "src_a")
+        .join(F.broadcast(nb), "src_b")
+        .groupBy("src_a", "src_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_shared_terms"),
+            F.sum(F.abs(dec(F.col("ca")) * F.col("nb") - dec(F.col("cb")) * F.col("na"))).alias("s_abs"),
+            F.sum("ca").alias("co_a"),
+            F.sum("cb").alias("co_b"),
+        )
+    )
+    spine = (
+        na.crossJoin(nb)
+        .filter(F.col("src_a") < F.col("src_b"))
+        .join(co, ["src_a", "src_b"], "left")
+    )
+    num = (
+        F.coalesce(F.col("s_abs"), F.lit(0).cast("decimal(38,0)"))
+        + (F.col("na") - F.coalesce(F.col("co_a"), F.lit(0))) * dec(F.col("nb"))
+        + (F.col("nb") - F.coalesce(F.col("co_b"), F.lit(0))) * dec(F.col("na"))
+    )
+    return spine.select(
+        "src_a",
+        "src_b",
+        F.coalesce(F.col("n_shared_terms"), F.lit(0)).cast("long").alias("n_shared_terms"),
+        int_div_trunc(num * 1_000_000, dec(F.col("na")) * F.col("nb") * 2).alias("tv_e6"),
     )

@@ -12,11 +12,11 @@ WKT-extraction parity query, which synthesizes POINT strings).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from week4_musemotion_spark.functions.exact import ratio_e4_sql
-from week4_musemotion_spark.functions.hashing import stable_hash64_sql
+from week4_musemotion_spark.functions.exact import dec, int_div_trunc, ratio_e4_sql
+from week4_musemotion_spark.functions.hashing import stable_hash64, stable_hash64_sql
 from week4_musemotion_spark.operators.curation import (
     contamination_overlap,
     repetition_stats,
@@ -29,7 +29,7 @@ from week4_musemotion_spark.operators.textstats import QUALITY_STOPWORDS
 from week4_musemotion_spark.operators.similarity import quantize_stats
 from week4_musemotion_spark.queries.extensions import _quality_e4_sql, _shingle_expr
 from week4_musemotion_spark.queries.registry import query
-from week4_musemotion_spark.sources.tables import load_table
+from week4_musemotion_spark.sources.tables import load_table, spread
 
 # ---------------------------------------------------------------------------
 # PII scrubbing
@@ -867,4 +867,358 @@ def q_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_emails").cast("long").alias("n_emails"),
         F.sum("n_ips").cast("long").alias("n_ips"),
         int_div_round(F.sum(tot) * 1_000_000, F.sum("n_chars")).alias("pii_per_mchars"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Intra-document repeated substrings
+# ---------------------------------------------------------------------------
+
+#: Gram size for self-repetition: 6 tokens — long enough that a
+#: repeated gram inside ONE doc implies copied/looped text.
+_SR_N = 6
+#: Per-(doc, gram) occurrence cap: a gram repeating more than this
+#: many times inside one doc would blow the within-doc position join
+#: quadratically; such degenerate docs are already nailed by
+#: q_repetition's top-token/top-bigram mass ratios, so the run
+#: report caps and defers (documented precision/size trade, the
+#: intra-doc analogue of q_winnow_pairs' stop-print cutoff).
+_SR_MAXOCC = 16
+_SR_MIN_GRAMS = 2
+_SR_TOPK = 100
+#: The corpus carries NO intra-document repetition at any SF, so the
+#: query synthesizes the looped-text pathology deterministically
+#: (q_pii_scrub's pattern: a dirty column built identically on both
+#: engines): docs with doc_id % 5 == 0 get their first _SR_BLOCK
+#: tokens appended 2 + doc_id % 3 more times — a period-_SR_BLOCK
+#: repeat the detector must find with the right cycle length.
+_SR_BLOCK = 8
+#: DuckDB range(n) is 0..n-1, length n == 2 + doc_id % 3 repeats
+_SR_REPS_SQL = "2 + doc_id % 3"
+
+
+@query(
+    "q_self_repetition_runs",
+    covers=("X-SELF-REPETITION",),
+    oracle=f"""
+    WITH tok AS (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w != '') AS ts FROM documents),
+    dirty AS (
+        SELECT doc_id,
+               CASE WHEN doc_id % 5 = 0
+                    THEN ts || flatten(list_transform(range({_SR_REPS_SQL}), i -> ts[1:{_SR_BLOCK}]))
+                    ELSE ts END AS ts
+        FROM tok
+    ),
+    g AS (SELECT doc_id, unnest({_shingle_expr(_SR_N)}) AS s,
+                 unnest(range(0, len(ts) - {_SR_N - 1})) AS pos
+          FROM dirty WHERE len(ts) >= {_SR_N}),
+    hx AS (SELECT doc_id, pos, {stable_hash64_sql("s")} AS h FROM g),
+    occ AS (SELECT doc_id, h, count(*) AS c FROM hx GROUP BY 1, 2),
+    keep AS (
+        SELECT hx.doc_id, hx.pos, hx.h FROM hx
+        JOIN occ ON hx.doc_id = occ.doc_id AND hx.h = occ.h
+        WHERE occ.c BETWEEN 2 AND {_SR_MAXOCC}
+    ),
+    mt AS (
+        SELECT a.doc_id, a.pos AS pa, b.pos - a.pos AS shift
+        FROM keep a JOIN keep b
+          ON a.doc_id = b.doc_id AND a.h = b.h AND a.pos < b.pos
+    ),
+    isl AS (
+        SELECT doc_id, shift, pa,
+               pa - row_number() OVER (PARTITION BY doc_id, shift ORDER BY pa) AS grp
+        FROM mt
+    ),
+    runs AS (
+        SELECT doc_id, shift, count(*) AS grams
+        FROM isl GROUP BY doc_id, shift, grp
+        HAVING count(*) >= {_SR_MIN_GRAMS}
+    )
+    SELECT doc_id,
+           CAST(max(grams) + {_SR_N - 1} AS BIGINT) AS longest_repeat_tokens,
+           CAST(count(*) AS BIGINT) AS n_runs,
+           CAST(min(shift) AS BIGINT) AS min_period
+    FROM runs GROUP BY doc_id
+    ORDER BY longest_repeat_tokens DESC, doc_id LIMIT {_SR_TOPK}
+    """,
+)
+def q_self_repetition_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximal repeated substrings WITHIN each document: self-matches
+    of 6-gram hashes at distinct positions, collapsed along the
+    position-shift diagonal by gaps-and-islands — a doc that repeats
+    a sentence k times shows a long run at shift = sentence length.
+    This is the loop/template-generation signal inside ONE document
+    (whole-doc ratios like distinct-token share blur it when the
+    repeated block is a minority of a long doc); min_period is the
+    repeat's cycle length in tokens.
+
+    Plan: one gram explode → per-(doc, gram) occurrence count (the
+    2..16 band kills unique grams and defers LONG degenerate docs —
+    22+ identical tokens push a gram past 16 occurrences — to
+    q_repetition's mass ratios; a SHORT degenerate doc of 7–21
+    identical tokens stays in-band and honestly reports
+    min_period = 1) → within-doc
+    position self-join → one window + two aggregates, all keyed by
+    (doc_id, shift); everything after the explode shuffles 8-byte
+    hashes on doc-local keys.  LIMIT rides a total order."""
+    from week4_musemotion_spark.functions.text import shingles, tokens
+
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    ts = tokens("text")
+    block = F.slice(ts, 1, _SR_BLOCK)
+    reps = (F.pmod(F.col("doc_id"), F.lit(3)) + 2).cast("int")
+    dirty = F.when(
+        F.pmod(F.col("doc_id"), F.lit(5)) == 0,
+        F.concat(ts, F.flatten(F.array_repeat(block, reps))),
+    ).otherwise(ts)
+    g = d.select("doc_id", F.posexplode(shingles(dirty, _SR_N)).alias("pos", "s"))
+    hx = g.select("doc_id", "pos", stable_hash64(F.col("s")).alias("h"))
+    occ = hx.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("c"))
+    keep = hx.join(
+        occ.filter((F.col("c") >= 2) & (F.col("c") <= _SR_MAXOCC)), ["doc_id", "h"]
+    ).select("doc_id", "pos", "h")
+    a = keep.select("doc_id", F.col("pos").alias("pa"), "h")
+    b = keep.select("doc_id", F.col("pos").alias("pb"), "h")
+    mt = (
+        a.join(b, ["doc_id", "h"])
+        .filter(F.col("pa") < F.col("pb"))
+        .select("doc_id", "pa", (F.col("pb") - F.col("pa")).alias("shift"))
+    )
+    wisl = Window.partitionBy("doc_id", "shift").orderBy("pa")
+    isl = mt.withColumn("grp", F.col("pa") - F.row_number().over(wisl))
+    runs = (
+        isl.groupBy("doc_id", "shift", "grp")
+        .agg(F.count(F.lit(1)).alias("grams"))
+        .filter(F.col("grams") >= _SR_MIN_GRAMS)
+    )
+    return (
+        runs.groupBy("doc_id")
+        .agg(
+            (F.max("grams") + (_SR_N - 1)).cast("long").alias("longest_repeat_tokens"),
+            F.count(F.lit(1)).cast("long").alias("n_runs"),
+            F.min("shift").cast("long").alias("min_period"),
+        )
+        .orderBy(F.desc("longest_repeat_tokens"), "doc_id")
+        .limit(_SR_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Simpson repetition index
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_repetition_simpson",
+    covers=("X-REPETITION-SIMPSON",),
+    oracle="""
+    WITH tok AS (
+        SELECT source, doc_id, unnest(list_filter(string_split_regex(text, '\\s+'), w -> w != '')) AS term
+        FROM documents
+    ),
+    c AS (SELECT source, doc_id, term, count(*) AS cnt FROM tok GROUP BY 1, 2, 3),
+    d AS (
+        SELECT source, doc_id,
+               sum(CAST(cnt AS HUGEINT) * (cnt - 1)) AS m2,
+               sum(cnt) AS nt
+        FROM c GROUP BY 1, 2
+        HAVING sum(cnt) >= 2
+    ),
+    e AS (
+        SELECT source, doc_id, m2, nt,
+               CAST(m2 * 1000000 // (CAST(nt AS HUGEINT) * (nt - 1)) AS BIGINT) AS doc_e6,
+               max(CAST(m2 * 1000000 // (CAST(nt AS HUGEINT) * (nt - 1)) AS BIGINT))
+                   OVER (PARTITION BY source) AS mx
+        FROM d
+    )
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(m2) * 1000000 // sum(CAST(nt AS HUGEINT) * (nt - 1)) AS BIGINT) AS micro_e6,
+           CAST(max(doc_e6) AS BIGINT) AS max_doc_e6,
+           CAST(min(doc_id) FILTER (doc_e6 = mx) AS BIGINT) AS worst_doc_id
+    FROM e GROUP BY source
+    """,
+)
+def q_repetition_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simpson repetition index per source: the probability that two
+    random token occurrences drawn from a document are the same
+    type, Σ c(c−1) / n(n−1) — the collision-probability twin of
+    entropy, computable in EXACT integers (entropy needs float log).
+    High index = degenerate repetition (looped generations, tag
+    soup); the per-source MICRO average (summed numerators over
+    summed denominators — no mean-of-ratios distortion) plus the
+    worst document (max index, min doc_id tie-break) give both the
+    monitoring number and the triage pointer.
+
+    Scale shape: two keyed aggregates (doc×term counts, then
+    per-doc moments) and a |docs|-row window — all map-side
+    combinable, nothing wider than the token count shuffle that
+    every text query already pays."""
+    from week4_musemotion_spark.functions.text import tokens
+
+    d = load_table(spark, sf_dir, "documents")
+    tok = d.select("source", "doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    c = tok.groupBy("source", "doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
+    docs = (
+        c.groupBy("source", "doc_id")
+        .agg(
+            F.sum(dec(F.col("cnt")) * (F.col("cnt") - 1)).alias("m2"),
+            F.sum("cnt").alias("nt"),
+        )
+        .filter(F.col("nt") >= 2)
+    )
+    doc_e6 = int_div_trunc(F.col("m2") * 1_000_000, dec(F.col("nt")) * (F.col("nt") - 1))
+    e = docs.withColumn("doc_e6", doc_e6).withColumn(
+        "mx", F.max("doc_e6").over(Window.partitionBy("source"))
+    )
+    return e.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        int_div_trunc(
+            F.sum("m2") * 1_000_000, F.sum(dec(F.col("nt")) * (F.col("nt") - 1))
+        ).alias("micro_e6"),
+        F.max("doc_e6").cast("long").alias("max_doc_e6"),
+        F.min(F.when(F.col("doc_e6") == F.col("mx"), F.col("doc_id")))
+        .cast("long")
+        .alias("worst_doc_id"),
+    )
+
+#: Selection budget for the coreset report — fixed so the oracle's
+#: unrolled round count matches the Spark loop exactly.
+_CORESET_K = 6
+
+
+def _coreset_sql(k: int) -> str:
+    """Unrolled greedy k-center in DuckDB: each round r is three
+    CTEs — d{r} (exact HUGEINT squared distance of every point to
+    the PREVIOUS pick), m{r} (running min distance to the selected
+    set), p{r} (the argmax pick, ties to min id) — followed by the
+    assignment of every point to its nearest selected center.
+    Positional list access goes through the idx-CTE gram pattern
+    (DuckDB has no ``unnest ... WITH ORDINALITY``)."""
+    dist = (
+        "sum(CAST(q.qv[i.pos] - c.qv[i.pos] AS HUGEINT)"
+        " * (q.qv[i.pos] - c.qv[i.pos]))"
+    )
+    parts = [
+        # MATERIALIZED: the round CTEs chain (p_r -> m_r -> d_r ->
+        # m_{r-1} -> ...), and DuckDB's default inlining re-evaluates
+        # the whole prefix per reference — measured 13s vs ~1s at
+        # sf0.1 for the oracle without the hints
+        "WITH q AS MATERIALIZED (SELECT vec_id, list_transform(embedding,"
+        " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv"
+        " FROM embeddings)",
+        "idx AS (SELECT unnest(range(1,"
+        " (SELECT max(len(qv)) FROM q) + 1)) AS pos)",
+        "c0 AS (SELECT vec_id, qv FROM q ORDER BY vec_id LIMIT 1)",
+    ]
+    for r in range(1, k):
+        prev_center = "c0" if r == 1 else f"c{r - 1}"
+        chosen = " UNION ALL ".join(
+            f"SELECT vec_id FROM {'c0' if j == 0 else f'p{j}'}" for j in range(r)
+        )
+        parts.append(
+            f"d{r} AS MATERIALIZED (SELECT q.vec_id, {dist} AS d FROM q"
+            f" CROSS JOIN idx i CROSS JOIN {prev_center} c GROUP BY q.vec_id)"
+        )
+        if r == 1:
+            parts.append("m1 AS MATERIALIZED (SELECT vec_id, d AS mind FROM d1)")
+        else:
+            parts.append(
+                f"m{r} AS MATERIALIZED (SELECT m.vec_id, least(m.mind, d.d) AS mind"
+                f" FROM m{r - 1} m JOIN d{r} d USING (vec_id))"
+            )
+        parts.append(
+            f"p{r} AS MATERIALIZED (SELECT vec_id, mind FROM m{r}"
+            f" WHERE vec_id NOT IN ({chosen})"
+            " ORDER BY mind DESC, vec_id LIMIT 1)"
+        )
+        parts.append(f"c{r} AS MATERIALIZED (SELECT q.vec_id, q.qv FROM q JOIN p{r} USING (vec_id))")
+    cents = " UNION ALL ".join(
+        f"SELECT {r} AS rnd, vec_id, qv FROM c{r}" for r in range(k)
+    )
+    sel = " UNION ALL ".join(
+        ["SELECT 0 AS rnd, vec_id, CAST(NULL AS BIGINT) AS radius FROM c0"]
+        + [
+            f"SELECT {r} AS rnd, vec_id, CAST(mind AS BIGINT) AS radius FROM p{r}"
+            for r in range(1, k)
+        ]
+    )
+    parts.append(f"cents AS ({cents})")
+    parts.append(f"sel AS ({sel})")
+    parts.append(
+        f"ad AS (SELECT q.vec_id, c.vec_id AS cid, {dist} AS d"
+        " FROM q CROSS JOIN idx i CROSS JOIN cents c GROUP BY q.vec_id, c.vec_id)"
+    )
+    parts.append(
+        "best AS (SELECT vec_id, cid, d, row_number() OVER"
+        " (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rk FROM ad)"
+    )
+    parts.append(
+        "asg AS (SELECT cid, CAST(count(*) AS BIGINT) AS assigned_n,"
+        " CAST(max(d) AS BIGINT) AS max_assigned FROM best WHERE rk = 1"
+        " GROUP BY cid)"
+    )
+    return (
+        ",\n".join(parts)
+        + "\nSELECT CAST(s.rnd AS BIGINT) AS round, s.vec_id AS center_id,"
+        " s.radius AS radius_num, a.assigned_n, a.max_assigned"
+        " FROM sel s JOIN asg a ON a.cid = s.vec_id"
+    )
+
+
+@query(
+    "q_coreset_report",
+    covers=("X-CORESET",),
+    oracle=_coreset_sql(_CORESET_K),
+)
+def q_coreset_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Coreset coverage/budget report: greedy k-center selection over
+    the embeddings table (min-id seed, exact integer squared
+    distances, argmax ties to min id — k bounded distributed rounds,
+    each ONE pass against a single broadcast center), then every row
+    assigned to its nearest selected center (one broadcast join, the
+    corpus never shuffles).  One row per center: selection round,
+    coverage radius² at selection time (non-increasing), assigned
+    cluster size, and realized max assigned distance — the numbers a
+    curation user reads to decide whether the selection budget k
+    covers the embedding space.
+
+    100 TB story: the driver loop is bounded by the selection budget
+    (k picks), each round is one distributed scan with O(1) driver
+    traffic, and the assignment is a k-row broadcast — nothing O(n)
+    leaves the executors.  Distances fit long here by construction
+    (≤ dims·(2e6)² ≈ 2.6e14 for unit-range 64-dim embeddings); the
+    internal accumulation is decimal(38,0) regardless, so a wider
+    embedding scale cannot wrap (round-12 dec-before-square fix).
+
+    Reference parity: the reference has no selection surface at all —
+    this extends the engine's training-data-pipeline layer
+    (SURVEY.md §2 extension operators)."""
+    from week4_musemotion_spark.operators.coreset import (
+        assign_to_centers,
+        k_center_select,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    sel = k_center_select(emb, _CORESET_K)
+    chosen = [s["id"] for s in sel]
+    centers = emb.filter(F.col("vec_id").isin(chosen)).select(
+        F.col("vec_id").alias("center_id"), "embedding"
+    )
+    per_center = (
+        assign_to_centers(emb, centers)
+        .groupBy("center_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("assigned_n"),
+            F.max(F.col("dist2_num").cast("decimal(38,0)"))
+            .cast("long")
+            .alias("max_assigned"),
+        )
+    )
+    sel_df = spark.createDataFrame(
+        [(s["round"], s["id"], s["radius_num"]) for s in sel],
+        "round long, center_id long, radius_num long",
+    )
+    return F.broadcast(sel_df).join(per_center, "center_id").select(
+        "round", "center_id", "radius_num", "assigned_n", "max_assigned"
     )

@@ -1,71 +1,462 @@
-"""Round-9 staged queries — registered on import, NOT imported by
-``queries/__init__`` yet, so the active registry (and the benched
-battery) is unchanged until activation.  ``import
-week4_musemotion_spark.queries.staged_r9`` to register.
+"""Dedup and provenance audits: how well the near-dup detectors work
+on this corpus, what duplication costs, and where copied text came
+from.
 
-Wave theme: the remaining *provenance / overlap-forensics* layer of a
-training-data pipeline — who copied what from whom, at which
-granularity, and do the detectors agree:
+- Detector quality: MinHash signature agreement against exact
+  Jaccard, the pair/doc counts across a threshold grid, the
+  (bands, rows) tuner, and Cohen's kappa between SimHash and exact
+  Jaccard (token and n-gram SimHash).
+- Duplication cost: per-source character inflation,
+  multiplicity-discounted effective tokens, and a cluster-aware
+  train/val/test split that certifies zero straddling pairs.
+- Copied text: duplicated-span coverage, winnowing fingerprints
+  (density, candidate pairs, recall against exact Jaccard) and
+  cross-document substring runs.
+- Provenance: per-document source bitmasks, near-dup cluster purity
+  and the quality bias of the documents a dedup pass drops.
 
-- q_winnow_density — winnowing fingerprint selection (Schleimer et
-  al. 2003, the MOSS algorithm): per-source audit of selected-print
-  density against the 2/(w+1) expectation.  The selection itself is
-  ONE window-min over a packed (hash, position) integer key — the
-  rightmost-min tie-break falls out of the key encoding, no argmin
-  subquery, no self-join.
-- q_winnow_pairs — document overlap via shared winnowed prints:
-  the MOSS use case, a print equi-join over an index that is only
-  ~2/(w+1) the size of the full gram stream (the winnowing guarantee:
-  any shared run of w+k-1 tokens shares >= 1 selected print, so
-  recall on long overlaps survives the 8x index shrink).
-- q_substring_runs — maximal duplicated-substring runs (the signal
-  behind exact-substring dedup, Lee et al. 2022): gaps-and-islands
-  over diagonal-aligned gram matches turns position pairs into
-  maximal runs with exact token lengths.
-- q_detector_agreement — Cohen's kappa (exact ppm integer
-  arithmetic) between the two independent near-dup detectors the
-  engine ships (63-bit SimHash Hamming<=1 vs exact 3-gram
-  Jaccard>=0.8) over the full C(n,2) pair universe — the monitoring
-  query that catches one detector silently rotting.
-- q_dedup_simhash_ngram / q_detector_agreement_ngram — the fix the
-  kappa baseline demanded: SimHash moved into the SAME shingle
-  feature space the Jaccard detector measures (distinct word
-  3-grams, Hamming<=4), and the after-picture kappa line (~0.9 vs
-  0.012) proving the two detectors now see the same duplicates.
-- q_provenance_bits — per exact-dup-group source-provenance bitmask
-  (bit_or of per-source bits): which source combinations ship
-  identical content, sized in groups and docs.
-- q_cusum_drift — integer CUSUM changepoint statistic over daily
-  event counts per type: S_t = D*prefix_t - t*total stays in exact
-  BIGINT (no mean floats), peak day + range as the drift verdict.
-
-Differential evidence: tests/test_staged_r9.py (Spark vs DuckDB at
-sf0.001 via conftest.staged_diff; sf0.01/sf0.1 run manually per the
-verify-skill round-6 note).
-"""
+Outputs are exact integers (``functions/exact.py``), so each DuckDB
+oracle matches bit for bit."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from week4_musemotion_spark.functions.eventtime import epoch_micros
-from week4_musemotion_spark.functions.exact import dec, int_div_trunc
+from week4_musemotion_spark.functions.exact import dec, int_div_trunc, ratio_e4
 from week4_musemotion_spark.functions.hashing import stable_hash64, stable_hash64_sql
 from week4_musemotion_spark.operators.dedup import jaccard_pairs, simhash_pairs
 from week4_musemotion_spark.queries.extensions import (
+    JACCARD_THRESHOLD,
     _SIMHASH_MAX_HAMMING,
     _SIMHASH_PAIR_BITS,
-    JACCARD_THRESHOLD,
+    _STOPLIST as _STOPLIST_SQL,
     _closure_ctes,
     _jaccard_ctes,
     _quality_e4_sql,
     _shingle_expr,
     _simhash_sql,
-    _STOPLIST as _STOPLIST_SQL,
 )
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table, spread
+
+
+#: Portable-MinHash family size for the fidelity audit (md5-derived
+#: seeds — engine-replayable, unlike the production xxhash64 family).
+_FIDELITY_HASHES = 16
+
+#: Pair domain for the sketch-quality audits: exact Jaccard >= 0.5
+#: (this corpus: planted pairs >= 0.9, noise <= 0.07 — huge margin).
+_FIDELITY_MIN_JACCARD = 0.5
+
+#: Dedup-threshold grid (e4 fixed-point).
+_SWEEP_THRESHOLDS = (5000, 6000, 7000, 8000, 9000)
+
+
+@query(
+    "q_minhash_fidelity",
+    covers=("X-MINHASH-FIDELITY",),
+    oracle=f"""
+    WITH {_jaccard_ctes(_FIDELITY_MIN_JACCARD)},
+    mh AS (
+        -- the shared helper's ROW-VALUED seed form: same 'k:' prefix,
+        -- same md5-prefix width, so Spark's stable_hash64(s, seed=k)
+        -- replays bit-for-bit
+        SELECT sh.doc_id, s.k,
+               min({stable_hash64_sql("sh.shingle", seed_expr="s.k")}) AS mv
+        FROM sh CROSS JOIN (SELECT unnest(range(0, {_FIDELITY_HASHES})) AS k) s
+        GROUP BY sh.doc_id, s.k
+    )
+    SELECT p.doc_a, p.doc_b,
+           CAST((2 * p.i * 10000 + (p.na + p.nb - p.i)) // (2 * (p.na + p.nb - p.i)) AS BIGINT) AS jaccard_e4,
+           CAST(count(*) FILTER (WHERE a.mv = b.mv) AS BIGINT) AS sig_agree,
+           CAST((2 * count(*) FILTER (WHERE a.mv = b.mv) * 10000 + {_FIDELITY_HASHES})
+                // (2 * {_FIDELITY_HASHES}) AS BIGINT) AS est_e4
+    FROM pairs p
+    JOIN mh a ON a.doc_id = p.doc_a
+    JOIN mh b ON b.doc_id = p.doc_b AND b.k = a.k
+    GROUP BY p.doc_a, p.doc_b, p.i, p.na, p.nb
+    """,
+)
+def q_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash sketch-quality audit: for every verified near-dup pair
+    (exact 3-gram Jaccard >= 0.5), the exact Jaccard next to the
+    16-seed MinHash signature agreement — measured on THIS corpus, so
+    a config change (bands, rows, hash count) is judged by data
+    rather than by the 1-(1-s^r)^b formula alone.  The hash family
+    here is the md5-portable ``stable_hash64`` (seeded), which is
+    what lets the oracle replay every signature bit-for-bit; the
+    production family swaps in xxhash64 behind the same shape.
+
+    Scale: pair domain comes from the shingle equi-join (never
+    all-pairs); signatures are one grouped aggregate over the
+    exploded shingle table (16 mins in a single shuffle)."""
+    from week4_musemotion_spark.operators.dedup import _intersections, shingle_strings
+
+    d = load_table(spark, sf_dir, "documents")
+    shs = shingle_strings(d).distinct().persist()
+    sh = shs.select("_id", F.col("s").alias("shingle"))
+    pairs = (
+        _intersections(None, sh)
+        .filter(F.col("jac") >= _FIDELITY_MIN_JACCARD)
+        .select("doc_a", "doc_b", "jaccard_e4")
+        .localCheckpoint(eager=False)  # feeds the member prune AND the final join
+    )
+    # signatures only for documents that appear in a near-dup pair —
+    # the pair set is tiny next to the corpus, so this broadcast
+    # semi-join prunes ~all of the 16-seed hashing and its shuffle
+    members = (
+        pairs.select(F.col("doc_a").alias("_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("_id")))
+        .distinct()
+    )
+    sig = (
+        shs.join(F.broadcast(members), "_id", "semi")
+        .groupBy("_id")
+        .agg(
+            *[
+                F.min(stable_hash64(F.col("s"), seed=k)).alias(f"mh_{k}")
+                for k in range(_FIDELITY_HASHES)
+            ]
+        )
+    )
+    a = sig.select(F.col("_id").alias("doc_a"), *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(_FIDELITY_HASHES)])
+    b = sig.select(F.col("_id").alias("doc_b"), *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(_FIDELITY_HASHES)])
+    agree = sum(
+        F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
+        for k in range(_FIDELITY_HASHES)
+    ).cast("long")
+    return (
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            "jaccard_e4",
+            agree.alias("sig_agree"),
+            ratio_e4(agree, F.lit(_FIDELITY_HASHES)).alias("est_e4"),
+        )
+    )
+
+
+@query(
+    "q_dedup_threshold_sweep",
+    covers=("X-DEDUP-THRESHOLD-SWEEP",),
+    oracle=f"""
+    WITH {_jaccard_ctes(_FIDELITY_MIN_JACCARD)},
+    jac AS (
+        SELECT doc_a, doc_b,
+               CAST((2 * i * 10000 + (na + nb - i)) // (2 * (na + nb - i)) AS BIGINT) AS jaccard_e4
+        FROM pairs
+    ),
+    grid AS (SELECT CAST(unnest([{", ".join(map(str, _SWEEP_THRESHOLDS))}]) AS BIGINT) AS thr_e4),
+    q AS (
+        SELECT g.thr_e4, j.doc_a, j.doc_b
+        FROM grid g LEFT JOIN jac j ON j.jaccard_e4 >= g.thr_e4
+    ),
+    dc AS (
+        SELECT thr_e4, CAST(count(DISTINCT d) AS BIGINT) AS n_dup_docs
+        FROM (SELECT thr_e4, unnest([doc_a, doc_b]) AS d FROM q WHERE doc_a IS NOT NULL)
+        GROUP BY thr_e4
+    )
+    SELECT p.thr_e4, p.n_pairs, COALESCE(dc.n_dup_docs, 0) AS n_dup_docs
+    FROM (SELECT thr_e4, CAST(count(doc_a) AS BIGINT) AS n_pairs FROM q GROUP BY thr_e4) p
+    LEFT JOIN dc ON dc.thr_e4 = p.thr_e4
+    """,
+)
+def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup threshold selection curve: for each candidate Jaccard
+    threshold, how many pairs would be flagged and how many documents
+    they touch — the table a curation team reads before fixing the
+    dedup threshold (too low: real content removed; too high: planted
+    near-dups survive).  Thresholds compare against the rounded-e4
+    integer Jaccard, so the grid comparison is exact on both engines.
+
+    Scale: the pair table is computed ONCE from the shingle equi-join
+    (near-dup pairs — tiny relative to the corpus), checkpointed, and
+    the grid fan-out runs over that tiny frame only."""
+    from week4_musemotion_spark.operators.dedup import jaccard_pairs
+
+    d = load_table(spark, sf_dir, "documents")
+    # EAGER checkpoint: the pair table feeds two aggregation branches;
+    # materializing the few-hundred-row table up front makes the
+    # fan-out free
+    pairs = (
+        jaccard_pairs(d, _FIDELITY_MIN_JACCARD)
+        .select("doc_a", "doc_b", "jaccard_e4")
+        .localCheckpoint(eager=False)  # lazy: the grid fan-out's
+        # final job materializes it once; both aggregate branches
+        # share the same checkpointed RDD (one job saved per run)
+    )
+    grid = spark.createDataFrame(
+        [(t,) for t in _SWEEP_THRESHOLDS], "thr_e4 long"
+    )
+    # crossJoin with the BROADCAST grid, never a grid⋈pairs theta
+    # join: Catalyst plans that as a CartesianProduct whose task
+    # count is left-partitions × right-partitions (measured ~10 s of
+    # empty-task launches on 1.3k rows) — and at 100 TB the pair side
+    # must stay distributed with the 5-row grid replicated anyway.
+    # Empty thresholds are recovered by left-joining the grid back
+    # onto the aggregates.
+    hits = pairs.crossJoin(F.broadcast(grid)).filter(
+        F.col("jaccard_e4") >= F.col("thr_e4")
+    )
+    n_pairs = hits.groupBy("thr_e4").agg(F.count(F.lit(1)).cast("long").alias("np"))
+    docs = (
+        hits.select("thr_e4", F.explode(F.array("doc_a", "doc_b")).alias("d"))
+        .groupBy("thr_e4")
+        .agg(F.countDistinct("d").cast("long").alias("nd"))
+    )
+    return (
+        grid.join(n_pairs, "thr_e4", "left")
+        .join(docs, "thr_e4", "left")
+        .select(
+            "thr_e4",
+            F.coalesce(F.col("np"), F.lit(0).cast("long")).alias("n_pairs"),
+            F.coalesce(F.col("nd"), F.lit(0).cast("long")).alias("n_dup_docs"),
+        )
+    )
+
+
+@query(
+    "q_dup_inflation",
+    covers=("X-DUP-INFLATION",),
+    oracle=f"""
+    WITH RECURSIVE {_closure_ctes(0.8)},
+    drop_ids AS (SELECT doc_id FROM cl WHERE keep_id != doc_id)
+    SELECT d.source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(x.doc_id) AS BIGINT) AS n_dropped,
+           CAST(sum(d.n_chars) AS BIGINT) AS chars_total,
+           CAST(coalesce(sum(CASE WHEN x.doc_id IS NOT NULL THEN d.n_chars END), 0) AS BIGINT) AS chars_dropped,
+           CAST((CAST(coalesce(sum(CASE WHEN x.doc_id IS NOT NULL THEN d.n_chars END), 0) AS HUGEINT) * 1000000)
+                // sum(d.n_chars) AS BIGINT) AS drop_ppm
+    FROM documents d LEFT JOIN drop_ids x ON d.doc_id = x.doc_id
+    GROUP BY d.source
+    """,
+)
+def q_dup_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplication inflation per source: how many documents — and how
+    many CHARACTERS, the cost that actually bills at training time —
+    a near-dedup pass (Jaccard >= 0.8 clusters, keep lowest id) would
+    remove.  The number a curation team reads to decide which sources
+    pay for aggressive dedup: drop_ppm ~ 0 means dedup there is
+    wasted compute; a hot source with 20% char inflation is the one
+    inflating epoch cost.  Composes the pair->cluster->verdict chain
+    (shingle equi-join + pointer-jumping CC) with one corpus
+    aggregate; exact integer ppm, oracle re-derives the closure with
+    a recursive CTE."""
+    from week4_musemotion_spark.operators.dedup import jaccard_pairs
+    from week4_musemotion_spark.operators.graph import dedup_clusters
+
+    d = load_table(spark, sf_dir, "documents")
+    drop = (
+        dedup_clusters(jaccard_pairs(d, 0.8))
+        .filter(F.col("keep_id") != F.col("doc_id"))
+        .select("doc_id", F.lit(1).alias("is_drop"))
+    )
+    chars_dropped = F.coalesce(
+        F.sum(F.when(F.col("is_drop") == 1, F.col("n_chars"))), F.lit(0)
+    ).cast("long")
+    return (
+        d.join(F.broadcast(drop), "doc_id", "left")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.count("is_drop").cast("long").alias("n_dropped"),
+            F.sum("n_chars").cast("long").alias("chars_total"),
+            chars_dropped.alias("chars_dropped"),
+            int_div_trunc(dec(chars_dropped) * 1_000_000, F.sum("n_chars")).alias(
+                "drop_ppm"
+            ),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Leakage-safe train/val/test split
+# ---------------------------------------------------------------------------
+
+#: Percent buckets for the split: [0,80) train, [80,90) val, rest test.
+_SPLIT_TRAIN, _SPLIT_VAL = 80, 90
+
+
+@query(
+    "q_leakage_split",
+    covers=("X-LEAKAGE-SPLIT",),
+    oracle=f"""
+    WITH RECURSIVE {{ctes}},
+    e2 AS (
+        SELECT doc_a AS u, doc_b AS v FROM pairs
+        UNION
+        SELECT doc_b AS u, doc_a AS v FROM pairs
+    ),
+    reach(u, v) AS (
+        SELECT u, v FROM e2
+        UNION
+        SELECT r.u, e.v FROM reach r JOIN e2 e ON r.v = e.u
+    ),
+    lab AS (SELECT u AS doc_id, least(u, min(v)) AS keep_id FROM reach GROUP BY u),
+    assign AS (
+        SELECT d.doc_id, d.n_chars, COALESCE(l.keep_id, d.doc_id) AS rep
+        FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+    ),
+    sp AS (
+        SELECT doc_id, n_chars, rep,
+               CASE WHEN b < {_SPLIT_TRAIN} THEN 'train'
+                    WHEN b < {_SPLIT_VAL} THEN 'val'
+                    ELSE 'test' END AS split
+        FROM (SELECT *, {{bucket}} % 100 AS b FROM assign)
+    ),
+    st AS (
+        SELECT count(*) AS straddle_pairs
+        FROM pairs p
+        JOIN sp a ON p.doc_a = a.doc_id
+        JOIN sp b ON p.doc_b = b.doc_id
+        WHERE a.split != b.split
+    )
+    SELECT sp.split,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(count(DISTINCT rep) AS BIGINT) AS n_clusters,
+           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+           CAST(st.straddle_pairs AS BIGINT) AS straddle_pairs
+    FROM sp CROSS JOIN st
+    GROUP BY sp.split, st.straddle_pairs
+    """.format(
+        ctes=_jaccard_ctes(0.8),
+        bucket=stable_hash64_sql("CAST(rep AS VARCHAR)"),
+    ),
+)
+def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup-aware train/val/test split: hash-bucket WHOLE near-dup
+    clusters (Jaccard >= 0.8 connected components; singletons are
+    their own cluster) into 80/10/10 splits, so two near-duplicate
+    documents can never land in different splits — the eval-set
+    contamination that naive per-doc hashing bakes in (a train doc's
+    near-copy in the test set is leakage that survives ordinary
+    dedup-after-split).  ``straddle_pairs`` re-counts near-dup pairs
+    crossing split boundaries: zero BY CONSTRUCTION, emitted as the
+    split's self-certificate.
+
+    Deterministic end to end: the bucket is the portable hash of the
+    cluster representative, so the split is stable across runs,
+    engines, and appends — new documents get their own buckets and
+    existing docs keep theirs, EXCEPT docs whose cluster a new
+    arrival merges with another (the representative re-keys; the
+    stability boundary is pinned in
+    ``tests/test_provenance_queries.py::test_leakage_split_stable_under_append...``).
+    Scale: pair generation is the shingle
+    equi-join (LSH at 100 TB), components are pointer-jumping CC,
+    and the split itself is one hash + one keyed aggregate — no new
+    shuffle beyond what dedup already paid."""
+    from week4_musemotion_spark.operators.dedup import jaccard_pairs
+    from week4_musemotion_spark.operators.graph import dedup_clusters
+    from week4_musemotion_spark.queries.extensions import JACCARD_THRESHOLD
+
+    d = load_table(spark, sf_dir, "documents")
+    # pairs feed clusters AND the straddle certificate; clusters feed
+    # the assignment — pin both (branch-reuse)
+    pairs = jaccard_pairs(d, JACCARD_THRESHOLD).localCheckpoint(eager=False)
+    clusters = dedup_clusters(pairs)
+    b = F.pmod(stable_hash64(F.col("rep").cast("string")), 100)
+    assign = (
+        d.select("doc_id", "n_chars")
+        .join(clusters, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_chars",
+            F.coalesce("keep_id", "doc_id").alias("rep"),
+        )
+        .withColumn(
+            "split",
+            F.when(b < _SPLIT_TRAIN, "train")
+            .when(b < _SPLIT_VAL, "val")
+            .otherwise("test"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    agg = assign.groupBy("split").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.countDistinct("rep").cast("long").alias("n_clusters"),
+        F.sum("n_chars").cast("long").alias("sum_chars"),
+    )
+    sa = assign.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
+    sb = assign.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
+    straddle = (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(F.col("split_a") != F.col("split_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("straddle_pairs"))
+    )
+    return agg.crossJoin(F.broadcast(straddle))
+
+#: Span width for duplicated-span coverage: 8-token grams — long
+#: enough that a shared gram implies copied text, short enough that
+#: a copied paragraph contributes many positions.
+_SPAN_N = 8
+
+
+def _span_gram_sql() -> str:
+    from week4_musemotion_spark.queries.extensions import _shingle_expr
+
+    return f"""tok AS (SELECT doc_id, source, list_filter(string_split_regex(text, '\\s+'), w -> w != '') AS ts FROM documents),
+    g AS (SELECT doc_id, source, unnest({_shingle_expr(_SPAN_N)}) AS s FROM tok WHERE len(ts) >= {_SPAN_N})"""
+
+
+@query(
+    "q_dup_span_coverage",
+    covers=("X-DUP-SPAN-COVERAGE",),
+    oracle=f"""
+    WITH {_span_gram_sql()},
+    hx AS (SELECT doc_id, source, {stable_hash64_sql('s')} AS h FROM g),
+    gs AS (
+        SELECT h, source, count(*) AS cnt, count(DISTINCT doc_id) AS nd_s
+        FROM hx GROUP BY 1, 2
+    ),
+    w AS (SELECT *, sum(nd_s) OVER (PARTITION BY h) AS nd FROM gs)
+    SELECT source,
+           CAST(sum(cnt) AS BIGINT) AS n_spans,
+           CAST(sum(CASE WHEN nd >= 2 THEN cnt ELSE 0 END) AS BIGINT) AS dup_spans,
+           CAST(CAST(sum(CASE WHEN nd >= 2 THEN cnt ELSE 0 END) AS HUGEINT) * 1000000
+                // CAST(sum(cnt) AS HUGEINT) AS BIGINT) AS coverage_ppm
+    FROM w GROUP BY source
+    """,
+)
+def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicated-span coverage per source: of all 8-token gram
+    positions, how many carry a gram that also occurs in at least one
+    OTHER document (corpus-wide, in ppm).  This is the signal behind
+    exact-substring dedup (Lee et al. 2022): document-level near-dup
+    scores miss the case where only a boilerplate paragraph repeats
+    across otherwise-distinct pages, while span coverage surfaces
+    exactly the share of text a substring-dedup pass would cut.
+
+    Plan: one corpus explode → one shuffle of the gram stream keyed
+    (hash, doc, source) — grams never travel, 8-byte keys do — whose
+    groups are exactly one row per (gram, document), so the window
+    over the gram hash counts ROWS to get distinct-docs-per-gram (no
+    countDistinct expansion, which would cost an extra full-width
+    exchange); a final |sources| aggregate emits exact integer ppm.
+    Hash collisions could in principle glue two distinct grams
+    (p ~ n²/2^61 — negligible), and the oracle uses the same hash,
+    so both engines see the identical value."""
+    from week4_musemotion_spark.functions.text import shingles, tokens
+    from week4_musemotion_spark.sources.tables import spread
+
+    # spread: parallelize explode+hash above a single-row-group scan
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
+    g = d.select(
+        "doc_id", "source", F.explode(shingles(tokens("text"), _SPAN_N)).alias("s")
+    ).select("doc_id", "source", stable_hash64(F.col("s")).alias("h"))
+    # one row per (gram, doc): cnt = occurrences of the gram in the doc
+    gd = g.groupBy("h", "doc_id", "source").agg(F.count(F.lit(1)).alias("cnt"))
+    w = gd.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy("h")))
+    dup = F.sum(F.when(F.col("nd") >= 2, F.col("cnt")).otherwise(F.lit(0)))
+    return w.groupBy("source").agg(
+        F.sum("cnt").cast("long").alias("n_spans"),
+        dup.cast("long").alias("dup_spans"),
+        int_div_trunc(dec(dup) * 1_000_000, F.sum("cnt")).alias("coverage_ppm"),
+    )
 
 # ---------------------------------------------------------------------------
 # Winnowing (Schleimer, Wilkerson, Aiken 2003 — "Winnowing: Local
@@ -864,144 +1255,326 @@ def q_dup_quality_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         int_div_trunc(dec(F.sum("n_tokens")), n).alias("mean_tokens"),
     )
 
-
 # ---------------------------------------------------------------------------
-# CUSUM drift (exact integer changepoint statistic)
+# Multiplicity-discounted corpus size
 # ---------------------------------------------------------------------------
-
-from week4_musemotion_spark.functions.eventtime import US_PER_DAY as _US_PER_DAY
-
-
-def _daily_dense_sql() -> str:
-    """CTE chain ``daily`` → ``span`` → ``grid`` → ``dense(event_type,
-    day_idx, cnt)``: per-type daily event counts densified over each
-    type's [min, max] day span so zero-event days carry cnt = 0 —
-    ONE definition shared by every daily-grid monitor (CUSUM,
-    seasonal residuals) so the grid semantics cannot drift.
-
-    Day bucketing truncates epoch-µs; both engines assume
-    NON-NEGATIVE epochs (int_div_trunc's p ≥ 0 contract — DuckDB
-    ``//`` truncates toward zero while the Spark helper is only
-    defined for p ≥ 0, so a pre-1970 timestamp would bucket
-    differently; the testdata contract is post-1970 event time)."""
-    return f"""daily AS (
-        SELECT event_type, epoch_us(ts) // {_US_PER_DAY} AS day_idx,
-               count(*) AS cnt
-        FROM events GROUP BY 1, 2
-    ),
-    span AS (SELECT event_type, min(day_idx) AS d0, max(day_idx) AS d1
-             FROM daily GROUP BY event_type),
-    grid AS (SELECT event_type, unnest(range(d0, d1 + 1)) AS day_idx FROM span),
-    dense AS (
-        SELECT g.event_type, g.day_idx, coalesce(d.cnt, 0) AS cnt
-        FROM grid g LEFT JOIN daily d USING (event_type, day_idx)
-    )"""
-
-
-def _daily_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of :func:`_daily_dense_sql` — ``(event_type,
-    day_idx, cnt)`` densified per type.  The grid join is
-    |types|×|days| rows; both sides derive from the already-tiny
-    daily aggregate."""
-    e = load_table(spark, sf_dir, "events")
-    day = int_div_trunc(epoch_micros(e), F.lit(_US_PER_DAY))
-    daily = e.groupBy("event_type", day.alias("day_idx")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    span = daily.groupBy("event_type").agg(
-        F.min("day_idx").alias("d0"), F.max("day_idx").alias("d1")
-    )
-    grid = span.select(
-        "event_type", F.explode(F.sequence("d0", "d1")).alias("day_idx")
-    )
-    return grid.join(daily, ["event_type", "day_idx"], "left").select(
-        "event_type", "day_idx", F.coalesce("cnt", F.lit(0)).alias("cnt")
-    )
 
 
 @query(
-    "q_cusum_drift",
-    covers=("X-CUSUM-DRIFT",),
+    "q_effective_tokens",
+    covers=("X-EFFECTIVE-TOKENS",),
     oracle=f"""
-    WITH {_daily_dense_sql()},
+    WITH RECURSIVE {_closure_ctes(JACCARD_THRESHOLD)},
+    csz AS (SELECT keep_id, count(*) AS csize FROM cl GROUP BY keep_id),
+    mem AS (SELECT cl.doc_id, csz.csize FROM cl JOIN csz USING (keep_id)),
     t AS (
-        SELECT event_type, day_idx, cnt,
-               count(*) OVER (PARTITION BY event_type) AS nd,
-               sum(cnt) OVER (PARTITION BY event_type) AS total
-        FROM dense
-    ),
-    s AS (
-        SELECT event_type, day_idx, nd, total,
-               sum(cnt * nd - total) OVER (PARTITION BY event_type ORDER BY day_idx
-                                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cusum
-        FROM t
-    ),
-    agg AS (
-        SELECT event_type, CAST(min(nd) AS BIGINT) AS n_days,
-               CAST(min(total) AS BIGINT) AS total_events,
-               CAST(max(cusum) AS BIGINT) AS s_max, CAST(min(cusum) AS BIGINT) AS s_min,
-               max({{'c': cusum, 'nd': -day_idx}}) AS pk
-        FROM s GROUP BY event_type
+        SELECT d.source,
+               len(list_filter(string_split_regex(d.text, '\\s+'), w -> w != '')) AS n_tokens,
+               coalesce(m.csize, 1) AS csize
+        FROM documents d LEFT JOIN mem m USING (doc_id)
     )
-    SELECT event_type, n_days, total_events, s_max, s_min,
-           s_max - s_min AS drift_range,
-           CAST(-(pk.nd) AS BIGINT) AS peak_day_idx
-    FROM agg
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS raw_tokens,
+           CAST(sum(n_tokens * 1000000 // csize) AS BIGINT) AS effective_tokens_e6,
+           CAST(CAST(sum(n_tokens * 1000000 // csize) AS HUGEINT) * 1000000
+                // (CAST(sum(n_tokens) AS HUGEINT) * 1000000) AS BIGINT) AS retention_ppm
+    FROM t GROUP BY source
     """,
 )
-def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint statistic over daily event counts per type,
-    in exact integers: S_t = Σ(cnt_i·D − total) = D·prefix_t −
-    t·total (deviation from the mean scaled by the day count D, so no
-    fractional mean ever exists).  The peak day is where the
-    cumulative deviation tops out — the classic changepoint estimate
-    — and (s_max − s_min) is the drift range a monitor thresholds.
+def q_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multiplicity-discounted corpus size per source: every document
+    contributes ``n_tokens / |its near-dup cluster|`` (singletons
+    divide by 1), in exact millionths — the honest token budget for
+    mixing weights.  Raw counts overstate syndicated sources; a
+    hard keep-one dedup count understates sources whose duplicates
+    are deliberate reprints; the discounted sum is the fixed point
+    both converge to, and retention_ppm is the per-source "how much
+    of it is really there" ratio.
 
-    All window work happens on the |types|×|days| daily grid,
-    DENSIFIED over each type's [min, max] day span so zero-event
-    days carry cnt=0 (deviation −total per silent day — a full
-    dropout drives the CUSUM hard negative instead of being
-    compressed away; n_days is therefore the span length, not the
-    active-day count).  The grid is a few thousand rows at any scale
-    — the corpus shuffle is the grouped count, everything after is
-    negligible — and the peak day rides
-    the SAME single aggregate as the extrema via a struct-max
-    (max(cusum, −day) — lexicographic struct ordering in both
-    engines), so the corpus is scanned exactly once.  Ties on the
-    peak break to the earliest day, keeping the LIMIT-free output
-    fully deterministic."""
-    dense = _daily_dense(spark, sf_dir)
-    wt = Window.partitionBy("event_type")
-    t = dense.select(
-        "event_type",
-        "day_idx",
-        "cnt",
-        F.count(F.lit(1)).over(wt).alias("nd"),
-        F.sum("cnt").over(wt).alias("total"),
+    Plan: near-dup pairs (banded) → CC → cluster sizes joined back
+    to members (two aggregates + one join on keep_id, all tiny) →
+    ONE corpus scan left-joined to the membership table on doc_id —
+    the token counting rides the scan projection; nothing quadratic
+    anywhere.  Per-doc truncating division matches the oracle
+    bit-for-bit (non-negative operands)."""
+    docs = load_table(spark, sf_dir, "documents")
+    from week4_musemotion_spark.functions.text import tokens
+
+    clusters = jaccard_pairs(docs, JACCARD_THRESHOLD)
+    from week4_musemotion_spark.operators.graph import dedup_clusters
+
+    cl = dedup_clusters(clusters)
+    csz = cl.groupBy("keep_id").agg(F.count(F.lit(1)).alias("csize"))
+    mem = cl.join(csz, "keep_id").select("doc_id", "csize")
+    t = (
+        docs.select("doc_id", "source", F.size(tokens("text")).cast("long").alias("n_tokens"))
+        .join(mem, "doc_id", "left")
+        .select(
+            "source",
+            "n_tokens",
+            F.coalesce("csize", F.lit(1)).alias("csize"),
+        )
     )
-    ws = wt.orderBy("day_idx").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    s = t.select(
-        "event_type",
-        "day_idx",
-        "nd",
-        "total",
-        F.sum(F.col("cnt") * F.col("nd") - F.col("total")).over(ws).alias("cusum"),
+    eff = F.sum(int_div_trunc(dec(F.col("n_tokens")) * 1_000_000, F.col("csize")))
+    raw = F.sum("n_tokens")
+    return t.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        raw.cast("long").alias("raw_tokens"),
+        eff.cast("long").alias("effective_tokens_e6"),
+        int_div_trunc(dec(eff) * 1_000_000, dec(raw) * 1_000_000).alias("retention_ppm"),
     )
-    agg = s.groupBy("event_type").agg(
-        F.min("nd").cast("long").alias("n_days"),
-        F.min("total").cast("long").alias("total_events"),
-        F.max("cusum").cast("long").alias("s_max"),
-        F.min("cusum").cast("long").alias("s_min"),
-        F.max(
-            F.struct(F.col("cusum").alias("c"), (-F.col("day_idx")).alias("ndl"))
-        ).alias("pk"),
+
+
+# ---------------------------------------------------------------------------
+# Winnowing recall vs exact Jaccard
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_winnow_recall",
+    covers=("X-WINNOW-RECALL",),
+    oracle=f"""
+    WITH RECURSIVE {_jaccard_ctes(JACCARD_THRESHOLD)},
+    jacp AS (SELECT doc_a, doc_b FROM pairs),
+    {_winnow_sel_sql(prefix="w_")},
+    fp AS (SELECT DISTINCT doc_id, selkey >> 20 AS ph
+           FROM w_sel WHERE pos >= {_WW - 1}),
+    wp AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
+        FROM fp a JOIN fp b ON a.ph = b.ph AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    j AS (
+        SELECT jacp.doc_a, coalesce(wp.shared, 0) AS shared
+        FROM jacp LEFT JOIN wp USING (doc_a, doc_b)
     )
-    return agg.select(
-        "event_type",
-        "n_days",
-        "total_events",
-        "s_max",
-        "s_min",
-        (F.col("s_max") - F.col("s_min")).alias("drift_range"),
-        (-F.col("pk.ndl")).cast("long").alias("peak_day_idx"),
+    SELECT CAST(count(*) AS BIGINT) AS jaccard_pairs,
+           CAST(count(*) FILTER (shared >= 1) AS BIGINT) AS caught_1,
+           CAST(count(*) FILTER (shared >= {_WP_MIN_SHARED}) AS BIGINT) AS caught_min,
+           CAST(CAST(count(*) FILTER (shared >= 1) AS HUGEINT) * 1000000
+                // greatest(count(*), 1) AS BIGINT) AS recall_1_ppm,
+           CAST(min(shared) AS BIGINT) AS min_shared
+    FROM j
+    """,
+)
+def q_winnow_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall of the winnowed print index against the EXACT Jaccard
+    detector: of all true near-dup pairs (3-gram Jaccard ≥ 0.8), how
+    many share ≥1 winnowed print (the index would surface them) and
+    how many clear the pair report's ≥{_WP_MIN_SHARED}-print bar —
+    the certification query for trading the full gram stream for the
+    2/(w+1) print index (ann_recall_report's role, played for the
+    text side).  The winnowing guarantee predicts a catch whenever a
+    shared CONTIGUOUS run is ≥ w+k−1 = 11 tokens — and it is exactly
+    sharp here: sf0.001's single miss (27/28) is a Jaccard-0.8 pair
+    of 11- and 10-token docs whose longest shared run is 10 tokens,
+    one below the bound (verified by direct run enumeration).  A
+    recall drop below the measured floor flags a broken selection;
+    the boundary miss is the theory working as stated.
+
+    Note this intentionally skips q_winnow_pairs' stop-print df
+    cutoff: recall is a property of the INDEX, measured before
+    precision filters.
+
+    Plan: both pair sets are bucketed equi-joins (shingle buckets /
+    print buckets), the comparison is one left join on the tiny true
+    pair set, and the report is a single row."""
+    docs = load_table(spark, sf_dir, "documents")
+    # branch-reuse pins (SCALING.md): jac feeds the candidate set
+    # (twice, via the union), the final left join, and the report —
+    # and fp self-joins against itself; without lineage truncation
+    # Catalyst re-plans the whole jaccard/winnow pipeline once per
+    # branch (measured: 84 scans / 109 exchanges unpinned vs one
+    # pipeline each pinned)
+    jac = (
+        jaccard_pairs(docs, JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=False)
+    )
+    sel = _winnow_selected(spark, sf_dir)
+    fp = (
+        sel.filter(F.col("pos") >= _WW - 1)
+        .select("doc_id", F.shiftright("selkey", 20).alias("ph"))
+        .distinct()
+    )
+    # only prints of docs that appear in the (tiny) true pair set can
+    # contribute a consumed row, so semi-join BEFORE the print
+    # self-join — without it boilerplate prints fan out over the whole
+    # corpus even though the left join reads only |jac| pairs (values
+    # identical either way; the oracle keeps the unrestricted spec)
+    cand = jac.select(F.col("doc_a").alias("doc_id")).union(
+        jac.select(F.col("doc_b").alias("doc_id"))
+    ).distinct()
+    fp = fp.join(cand, "doc_id", "left_semi").localCheckpoint(eager=False)
+    wp = (
+        fp.select(F.col("doc_id").alias("doc_a"), "ph")
+        .join(fp.select(F.col("doc_id").alias("doc_b"), "ph"), "ph")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    j = jac.join(wp, ["doc_a", "doc_b"], "left").select(
+        F.coalesce("shared", F.lit(0)).alias("shared")
+    )
+    n = F.count(F.lit(1))
+    # coalesce: a pair-free corpus must report 0, not NULL (the
+    # oracle's count(*) FILTER yields 0 on empty input)
+    caught1 = F.coalesce(F.sum(F.when(F.col("shared") >= 1, 1).otherwise(0)), F.lit(0))
+    caught_min = F.coalesce(
+        F.sum(F.when(F.col("shared") >= _WP_MIN_SHARED, 1).otherwise(0)), F.lit(0)
+    )
+    return j.agg(
+        n.cast("long").alias("jaccard_pairs"),
+        caught1.cast("long").alias("caught_1"),
+        caught_min.cast("long").alias("caught_min"),
+        int_div_trunc(dec(caught1) * 1_000_000, F.greatest(n, F.lit(1))).alias("recall_1_ppm"),
+        F.min("shared").cast("long").alias("min_shared"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH banding tuner
+# ---------------------------------------------------------------------------
+
+#: Signature family size and the (bands, rows) grid it factors into.
+_TUNE_HASHES = 16
+_TUNE_CONFIGS = ((16, 1), (8, 2), (4, 4), (2, 8))
+
+#: Pair domain (exact Jaccard >= this) and the "true dup" threshold
+#: separating recall pairs from sub-threshold (false-positive proxy)
+#: pairs — same constants as the MinHash fidelity audit.
+_TUNE_MIN_JACCARD = 0.5
+_TUNE_TRUE_E4 = 8000
+
+
+@query(
+    "q_band_tune",
+    covers=("X-LSH-BAND-TUNE",),
+    oracle=f"""
+    WITH {_jaccard_ctes(_TUNE_MIN_JACCARD)},
+    mh AS (
+        SELECT sh.doc_id, s.k,
+               min({stable_hash64_sql("sh.shingle", seed_expr="s.k")}) AS mv
+        FROM sh CROSS JOIN (SELECT unnest(range(0, {_TUNE_HASHES})) AS k) s
+        GROUP BY sh.doc_id, s.k
+    ),
+    jc AS (
+        SELECT doc_a, doc_b,
+               CAST((2 * i * 10000 + (na + nb - i)) // (2 * (na + nb - i)) AS BIGINT) AS jaccard_e4
+        FROM pairs
+    ),
+    ag AS (
+        SELECT j.doc_a, j.doc_b, a.k,
+               CASE WHEN a.mv = b.mv THEN 1 ELSE 0 END AS eq
+        FROM jc j
+        JOIN mh a ON a.doc_id = j.doc_a
+        JOIN mh b ON b.doc_id = j.doc_b AND b.k = a.k
+    ),
+    cfg AS (SELECT unnest([{", ".join(str(b) for b, _ in _TUNE_CONFIGS)}]) AS b,
+                   unnest([{", ".join(str(r) for _, r in _TUNE_CONFIGS)}]) AS r),
+    bh AS (
+        SELECT doc_a, doc_b, cfg.b, cfg.r, ag.k // cfg.r AS band,
+               min(eq) AS band_hit
+        FROM ag CROSS JOIN cfg
+        GROUP BY 1, 2, 3, 4, 5
+    ),
+    ph AS (SELECT doc_a, doc_b, b, r, max(band_hit) AS hit FROM bh GROUP BY 1, 2, 3, 4)
+    SELECT CAST(ph.b AS BIGINT) AS bands, CAST(ph.r AS BIGINT) AS rows_per_band,
+           CAST(count(*) FILTER (jaccard_e4 >= {_TUNE_TRUE_E4}) AS BIGINT) AS n_true,
+           CAST(count(*) FILTER (jaccard_e4 >= {_TUNE_TRUE_E4} AND hit = 1) AS BIGINT) AS n_true_hit,
+           CAST(count(*) FILTER (jaccard_e4 < {_TUNE_TRUE_E4}) AS BIGINT) AS n_sub,
+           CAST(count(*) FILTER (jaccard_e4 < {_TUNE_TRUE_E4} AND hit = 1) AS BIGINT) AS n_sub_hit
+    FROM ph JOIN jc ON jc.doc_a = ph.doc_a AND jc.doc_b = ph.doc_b
+    GROUP BY 1, 2
+    """,
+)
+def q_band_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH banding tuner: for each (bands, rows) factoring
+    of the 16-seed portable signature family, the measured any-band-
+    collision rate on true near-dup pairs (exact Jaccard >= 0.8 —
+    recall) and on sub-threshold pairs (0.5 <= j < 0.8 — the false-
+    positive pressure a config admits into verification).  This is
+    the 1-(1-s^r)^b S-curve (Leskovec-Rajaraman-Ullman, MMDS ch. 3)
+    evaluated on THIS corpus with the same signatures production
+    banding uses, so a config choice is data, not formula: fewer
+    rows per band = higher recall AND more sub-threshold candidates
+    — the table shows both sides of that trade at once.
+
+    Scale shape: the pair domain comes from the shingle equi-join
+    (never all-pairs); signatures are one grouped aggregate over
+    shingles pruned to pair members (broadcast semi-join); the band
+    logic is pure column expressions over 16 columns — the config
+    explode multiplies the PAIR table (tiny) by 4, never the
+    corpus."""
+    from week4_musemotion_spark.operators.dedup import _intersections, shingle_strings
+
+    d = load_table(spark, sf_dir, "documents")
+    shs = shingle_strings(d).distinct().persist()
+    sh = shs.select("_id", F.col("s").alias("shingle"))
+    pairs = (
+        _intersections(None, sh)
+        .filter(F.col("jac") >= _TUNE_MIN_JACCARD)
+        .select("doc_a", "doc_b", "jaccard_e4")
+        .localCheckpoint(eager=False)
+    )
+    members = (
+        pairs.select(F.col("doc_a").alias("_id"))
+        .unionByName(pairs.select(F.col("doc_b").alias("_id")))
+        .distinct()
+    )
+    sig = (
+        shs.join(F.broadcast(members), "_id", "semi")
+        .groupBy("_id")
+        .agg(
+            *[
+                F.min(stable_hash64(F.col("s"), seed=k)).alias(f"mh_{k}")
+                for k in range((_TUNE_HASHES))
+            ]
+        )
+    )
+    a = sig.select(F.col("_id").alias("doc_a"), *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(_TUNE_HASHES)])
+    b = sig.select(F.col("_id").alias("doc_b"), *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(_TUNE_HASHES)])
+
+    def hit(bands: int, rows: int) -> F.Column:
+        band_hits = []
+        for band in range(bands):
+            ks = range(band * rows, band * rows + rows)
+            conj = None
+            for k in ks:
+                eq = F.col(f"a_{k}") == F.col(f"b_{k}")
+                conj = eq if conj is None else (conj & eq)
+            band_hits.append(conj)
+        disj = band_hits[0]
+        for bh in band_hits[1:]:
+            disj = disj | bh
+        return disj
+
+    cfg = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(bnd).alias("bands"),
+                    F.lit(r).alias("rows_per_band"),
+                    hit(bnd, r).alias("hit"),
+                )
+                for bnd, r in _TUNE_CONFIGS
+            ]
+        )
+    ).alias("cfg")
+    is_true = F.col("jaccard_e4") >= _TUNE_TRUE_E4
+    return (
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("jaccard_e4", cfg)
+        .select("jaccard_e4", "cfg.bands", "cfg.rows_per_band", "cfg.hit")
+        .groupBy("bands", "rows_per_band")
+        .agg(
+            F.count(F.when(is_true, 1)).cast("long").alias("n_true"),
+            F.count(F.when(is_true & F.col("hit"), 1)).cast("long").alias("n_true_hit"),
+            F.count(F.when(~is_true, 1)).cast("long").alias("n_sub"),
+            F.count(F.when(~is_true & F.col("hit"), 1)).cast("long").alias("n_sub_hit"),
+        )
+        .withColumn("bands", F.col("bands").cast("long"))
+        .withColumn("rows_per_band", F.col("rows_per_band").cast("long"))
     )

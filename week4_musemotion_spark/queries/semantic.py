@@ -725,3 +725,153 @@ def q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return gram_exact(emb, "embedding")
+
+
+# ---------------------------------------------------------------------------
+# Embedding-cosine threshold sweep
+# ---------------------------------------------------------------------------
+
+#: Cosine-threshold grid (e6 fixed-point), above the pair-generation
+#: base EMBED_DUP_THRESHOLD so the grid compare runs on the ROUNDED
+#: integer cosine — exact on both engines; 510000 sits above this
+#: corpus' organic maximum (~0.51) and exercises the empty row.
+_SEM_SWEEP = (450000, 470000, 490000, 510000)
+
+
+@query(
+    "q_semantic_threshold_sweep",
+    covers=("X-SEM-THRESHOLD-SWEEP",),
+    oracle="""
+    WITH p AS (
+        SELECT a.vec_id AS vec_id_a, a.embedding AS va,
+               b.vec_id AS vec_id_b, b.embedding AS vb
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+    ),
+    s AS (
+        SELECT vec_id_a, vec_id_b,
+               {cos} AS cos
+        FROM p
+    ),
+    pe AS (
+        SELECT vec_id_a, vec_id_b,
+               CAST(floor(cos * 1000000 + 0.5) AS BIGINT) AS cosine_e6
+        FROM s WHERE cos >= {base}
+    ),
+    grid AS (SELECT CAST(unnest([{grid}]) AS BIGINT) AS thr_e6),
+    q AS (
+        SELECT g.thr_e6, p.vec_id_a, p.vec_id_b
+        FROM grid g LEFT JOIN pe p ON p.cosine_e6 >= g.thr_e6
+    ),
+    dc AS (
+        SELECT thr_e6, CAST(count(DISTINCT v) AS BIGINT) AS n_dup_vecs
+        FROM (SELECT thr_e6, unnest([vec_id_a, vec_id_b]) AS v FROM q WHERE vec_id_a IS NOT NULL)
+        GROUP BY thr_e6
+    )
+    SELECT n.thr_e6, n.n_pairs, COALESCE(dc.n_dup_vecs, 0) AS n_dup_vecs
+    FROM (SELECT thr_e6, CAST(count(vec_id_a) AS BIGINT) AS n_pairs FROM q GROUP BY thr_e6) n
+    LEFT JOIN dc ON dc.thr_e6 = n.thr_e6
+    """.format(
+        cos=_COSINE_SQL_FRAG.format(a="va", b="vb"),
+        base=EMBED_DUP_THRESHOLD,
+        grid=", ".join(map(str, _SEM_SWEEP)),
+    ),
+)
+def q_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-threshold selection curve for embeddings: per
+    candidate cosine threshold, the pair count and the vectors those
+    pairs touch — the embedding-space twin of the Jaccard sweep
+    (q_dedup_threshold_sweep), read before fixing the semantic-dedup
+    cut (too low: distinct content merged; too high: paraphrase
+    clusters survive).  Thresholds compare against the rounded-e6
+    integer cosine, so the grid is exact on both engines; only the
+    pair-generation base uses the float cosine, at the same
+    engine-stable threshold q_dedup_embedding already pins.
+
+    Scale: the pair table is computed ONCE (block-nested-loop here —
+    the exact baseline; cosine_pairs_lsh at 100 TB feeds the same
+    sweep) and the grid fan-out runs over that tiny frame."""
+    from week4_musemotion_spark.operators.similarity import cosine_pairs
+    from week4_musemotion_spark.queries.extensions import EMBED_DUP_THRESHOLD
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = cosine_pairs(emb, EMBED_DUP_THRESHOLD).localCheckpoint(eager=False)
+    # lazy: both grid aggregate branches share the checkpointed RDD
+    # inside the one final job — the eager form paid a separate
+    # blocking pair-build job first
+    grid = spark.createDataFrame([(t,) for t in _SEM_SWEEP], "thr_e6 long")
+    # broadcast-grid crossJoin, NOT a grid⋈pairs theta join (Catalyst
+    # plans that as a task-exploding CartesianProduct — see
+    # q_dedup_threshold_sweep); empty thresholds recovered by
+    # left-joining the grid onto the aggregates
+    hits = pairs.crossJoin(F.broadcast(grid)).filter(
+        F.col("cosine_e6") >= F.col("thr_e6")
+    )
+    n_pairs = hits.groupBy("thr_e6").agg(F.count(F.lit(1)).cast("long").alias("np"))
+    vecs = (
+        hits.select("thr_e6", F.explode(F.array("vec_id_a", "vec_id_b")).alias("v"))
+        .groupBy("thr_e6")
+        .agg(F.countDistinct("v").cast("long").alias("nd"))
+    )
+    return (
+        grid.join(n_pairs, "thr_e6", "left")
+        .join(vecs, "thr_e6", "left")
+        .select(
+            "thr_e6",
+            F.coalesce(F.col("np"), F.lit(0).cast("long")).alias("n_pairs"),
+            F.coalesce(F.col("nd"), F.lit(0).cast("long")).alias("n_dup_vecs"),
+        )
+    )
+
+
+@query(
+    "q_embed_dispersion",
+    covers=("X-DISPERSION",),
+    oracle="""
+    WITH q AS (
+        SELECT label,
+               list_transform(embedding,
+                   x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS qv
+        FROM embeddings
+    ),
+    idx AS (SELECT unnest(range(1, (SELECT max(len(qv)) FROM q) + 1)) AS pos),
+    per_dim AS (
+        SELECT label, i.pos,
+               sum(CAST(q.qv[i.pos] AS HUGEINT)) AS sd,
+               sum(CAST(q.qv[i.pos] AS HUGEINT) * q.qv[i.pos]) AS s2p,
+               count(*) AS np
+        FROM q CROSS JOIN idx i GROUP BY label, i.pos
+    ),
+    g AS (
+        SELECT label, sum(s2p) AS s2, sum(sd * sd) AS sumsq_d, max(np) AS n
+        FROM per_dim GROUP BY label
+    )
+    SELECT label,
+           CAST(n AS BIGINT) AS n,
+           CAST(CAST(n AS HUGEINT) * (n - 1) // 2 AS VARCHAR) AS pairs,
+           CAST(CAST(n AS HUGEINT) * s2 - sumsq_d AS VARCHAR) AS ssd,
+           CAST(CASE WHEN n > 1 THEN (CAST(n AS HUGEINT) * s2 - sumsq_d)
+                     // (CAST(n AS HUGEINT) * (n - 1) // 2 * 1000000)
+                END AS BIGINT) AS msd_e6
+    FROM g
+    """,
+)
+def q_embed_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-label embedding-dispersion collapse audit: the exact sum
+    of squared pairwise distances per group from the closed form
+    n·Σ‖q‖² − Σ_d(Σq_d)² — ONE scan + two aggregates whose state is
+    O(groups × dims), where the naive formulation is O(n²) pairs per
+    group.  ``pairs`` and ``ssd`` are exact integers emitted as digit
+    strings (both outgrow int64 at corpus scale); ``msd_e6`` is the
+    mean squared distance a drift dashboard trends — a group near
+    zero is embedding-collapsed (all-duplicate or degenerate encoder
+    output).
+
+    100 TB story: sufficient statistics, never pairs — the group
+    state is ~dims rows of decimal accumulators, merge is addition,
+    and the arithmetic is exact at 1e12 rows (decimal(38,0)
+    accumulation, dec-before-product throughout — the round-12
+    denominator fix keeps msd exact past 4.3M-row groups)."""
+    from week4_musemotion_spark.operators.linalg import embedding_dispersion
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return embedding_dispersion(emb, vec_col="embedding", group_col="label")

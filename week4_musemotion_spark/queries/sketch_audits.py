@@ -1,134 +1,243 @@
-"""ACTIVATED IN ROUND 8 (built + differentially tested in round 7,
-staged behind the ≲10-registrations/round evidence-rotation budget;
-imported by ``queries/__init__`` since round 8).
+"""Sketch audits: each query puts a sketch's answer beside the exact one
+on the same data, so the error a sketch configuration costs is
+measured on this corpus rather than read off its bound.
 
-- q_dup_span_coverage — per source, the fraction of 8-gram positions
-  whose gram also appears in another document: the cross-document
-  duplicated-SPAN signal behind exact-substring dedup (Lee et al.
-  2022, arXiv:2107.06499) that pair-level Jaccard misses when only a
-  boilerplate paragraph repeats inside otherwise-distinct documents.
-- q_bloom_fp_audit — the bloom filter itself made oracle-checkable:
-  exact per-outcome row counts (true match / false positive /
-  pruned) for a dim-key bloom over the fact side, with the oracle
-  re-deriving membership from the hash positions by joins.
-- q_source_overlap_sketch — pairwise source-vocabulary overlap by
-  inclusion-exclusion over MERGED HLL registers (hll_merge): |S|²
-  pairs cost |S|²·m register rows after one corpus scan, never a
-  pairwise data union; the mirror-site triage signal.
-- q_cms_point_error — count-min point-frequency audit over a width
-  grid: top-20 exact counts vs cms_lookup estimates with over_ppm
-  collapsing ~1/width; the one-sided never-underestimates guarantee
-  holds in every row.
-- q_stream_distinct_report — the STREAMING register store
-  (streaming/sketches.make_hll_sink driven over ordered
-  micro-batches, gate-report fixture pattern) read back and compared
-  against the pure-batch HLL oracle: bit-equal because max-merge is
-  associative/commutative/idempotent, so the driver certifies the
-  streaming path end to end.
-- q_semantic_threshold_sweep — the embedding-space twin of the
-  Jaccard threshold sweep: per candidate cosine cut, pair and
-  touched-vector counts from ONE pair table, grid-compared on the
-  rounded-e6 integer cosine.
-- q_hll_fold_grid — the precision-fold audit: one p=11 register
-  table folded (hll_fold) to each grid precision and proven equal —
-  registers AND estimate — to a direct build at that precision; the
-  one-pass grid contract the bloom/cms fold family established,
-  completed for cardinality.
-- q_rp_distortion — Johnson-Lindenstrauss ±1 projection audit:
-  projected-vs-full cosine error over the exact near-dup pair set
-  and the per-vector norm-preservation ratio, across a prefix-nested
-  target-dim grid served by ONE projection pass.
-"""
+- HyperLogLog: per-source distinct shingles, pairwise source
+  overlap, precision folding, and the streaming HLL store.
+- Bloom filters: a bloom-pruned fact-dim join (exact result) and the
+  false-positive rate across filter sizes.
+- Count-min sketch: point-query error across widths.
+- Quantile sketches: document-length and embedding-norm quantiles,
+  the streaming quantile store, and exact per-source and per-nation
+  quantiles.
+- Streaming count store: daily counts before and after compaction.
+
+The sketches are built from engine-portable primitives (md5-derived
+hashes, integer registers), so the DuckDB oracles replay every
+estimate exactly."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from week4_musemotion_spark.functions.eventtime import US_PER_DAY
 from week4_musemotion_spark.functions.exact import dec, int_div_trunc
 from week4_musemotion_spark.functions.hashing import stable_hash64, stable_hash64_sql
-from week4_musemotion_spark.queries.extensions import (
-    _COSINE_SQL_FRAG,
-    EMBED_DUP_THRESHOLD,
+from week4_musemotion_spark.operators.qsketch import (
+    bucket_counts,
+    quantiles_from_counts,
+    quantiles_sql,
 )
 from week4_musemotion_spark.queries.registry import query
-from week4_musemotion_spark.queries.staged_r7 import (
-    _BLOOM_PART_PRED_SQL,
-    _HLL_M,
-    _HLL_P,
-    _HLL_W1,
-    _hll_e2_sql,
-    _hll_rho_sql,
-    _hll_shingle_sql,
-)
 from week4_musemotion_spark.sources.tables import load_table
 
-#: Span width for duplicated-span coverage: 8-token grams — long
-#: enough that a shared gram implies copied text, short enough that
-#: a copied paragraph contributes many positions.
-_SPAN_N = 8
+
+# ---------------------------------------------------------------------------
+# Portable-HLL distinct sketch audit
+# ---------------------------------------------------------------------------
+
+#: HLL precision for the distinct-sketch audit: m = 2^8 = 256
+#: registers (~6.5 % standard error).  The corpus' per-source 3-gram
+#: cardinality (>= ~1.1k at sf0.001, growing with sf) sits safely in
+#: the raw-estimate regime (> 2.5 m = 640) at every test SF.
+_HLL_P = 8
+_HLL_M = 1 << _HLL_P
 
 
-def _span_gram_sql() -> str:
+def _hll_w1() -> int:
+    """Empty-register exponent W+1, derived from the operator's own
+    hash-width constant so oracle and plan cannot drift."""
+    from week4_musemotion_spark.operators.sketches import _HASH_BITS
+
+    return _HASH_BITS - _HLL_P + 1
+
+
+_HLL_W1 = _hll_w1()
+
+
+def _hll_num() -> int:
+    """α_e7 · m² · 2^(W+1) — the pinned integer numerator shared by
+    the Spark plan and the oracle."""
+    from week4_musemotion_spark.operators.sketches import hll_alpha_e7
+
+    return hll_alpha_e7(_HLL_M) * _HLL_M * _HLL_M * (1 << _HLL_W1)
+
+
+def _hll_shingle_sql(n: int = 3) -> str:
+    """documents → per-source raw n-gram shingle stream ``sh(source, s)``."""
     from week4_musemotion_spark.queries.extensions import _shingle_expr
 
-    return f"""tok AS (SELECT doc_id, source, list_filter(string_split_regex(text, '\\s+'), w -> w != '') AS ts FROM documents),
-    g AS (SELECT doc_id, source, unnest({_shingle_expr(_SPAN_N)}) AS s FROM tok WHERE len(ts) >= {_SPAN_N})"""
+    return f"""tok AS (SELECT source, list_filter(string_split_regex(text, '\\s+'), w -> w != '') AS ts FROM documents),
+    sh AS (SELECT source, unnest({_shingle_expr(n)}) AS s FROM tok WHERE len(ts) >= {n})"""
+
+
+def _hll_rho_sql(h: str = "h") -> str:
+    """Register rank of a hash expression — the oracle twin of the
+    rho computation in operators/sketches.hll_registers."""
+    return (
+        f"CASE WHEN ({h} >> {_HLL_P}) = 0 THEN {_HLL_W1} "
+        f"ELSE {_HLL_W1} - length(bin({h} >> {_HLL_P})) END"
+    )
+
+
+def _hll_e2_sql(dp: str = "dp", present: str = "present") -> str:
+    """The exact-integer raw-estimate expression from a group's
+    harmonic partial sum and present-register count — shared by every
+    HLL oracle so the formula exists once."""
+    return (
+        f"CAST(CAST('{_hll_num()}' AS HUGEINT)"
+        f" // (CAST({dp} + ({_HLL_M} - {present}) * (CAST(1 AS BIGINT) << {_HLL_W1}) AS HUGEINT) * 100000)"
+        f" AS BIGINT)"
+    )
 
 
 @query(
-    "q_dup_span_coverage",
-    covers=("X-DUP-SPAN-COVERAGE",),
+    "q_distinct_sketch",
+    covers=("X-HLL-DISTINCT",),
     oracle=f"""
-    WITH {_span_gram_sql()},
-    hx AS (SELECT doc_id, source, {stable_hash64_sql('s')} AS h FROM g),
-    gs AS (
-        SELECT h, source, count(*) AS cnt, count(DISTINCT doc_id) AS nd_s
+    WITH {_hll_shingle_sql(3)},
+    hx AS (SELECT source, s, {stable_hash64_sql('s')} AS h FROM sh),
+    reg AS (
+        SELECT source, h & {_HLL_M - 1} AS bucket,
+               max({_hll_rho_sql()}) AS reg
         FROM hx GROUP BY 1, 2
     ),
-    w AS (SELECT *, sum(nd_s) OVER (PARTITION BY h) AS nd FROM gs)
-    SELECT source,
-           CAST(sum(cnt) AS BIGINT) AS n_spans,
-           CAST(sum(CASE WHEN nd >= 2 THEN cnt ELSE 0 END) AS BIGINT) AS dup_spans,
-           CAST(CAST(sum(CASE WHEN nd >= 2 THEN cnt ELSE 0 END) AS HUGEINT) * 1000000
-                // CAST(sum(cnt) AS HUGEINT) AS BIGINT) AS coverage_ppm
-    FROM w GROUP BY source
+    agg AS (
+        SELECT source, count(*) AS present,
+               sum(CAST(1 AS BIGINT) << CAST({_HLL_W1} - reg AS INT)) AS dp
+        FROM reg GROUP BY 1
+    ),
+    est AS (
+        SELECT source,
+               {_hll_e2_sql()} AS hll_e2,
+               CAST({_HLL_M} - present AS BIGINT) AS zero_regs
+        FROM agg
+    ),
+    ex AS (SELECT source, count(DISTINCT s) AS exact_distinct FROM sh GROUP BY 1)
+    SELECT e.source,
+           CAST(ex.exact_distinct AS BIGINT) AS exact_distinct,
+           e.hll_e2,
+           e.zero_regs,
+           CAST(abs(CAST(e.hll_e2 AS HUGEINT) - 100 * ex.exact_distinct) * 1000000
+                // (CAST(100 AS HUGEINT) * ex.exact_distinct) AS BIGINT) AS err_ppm
+    FROM est e JOIN ex ON e.source = ex.source
     """,
 )
-def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicated-span coverage per source: of all 8-token gram
-    positions, how many carry a gram that also occurs in at least one
-    OTHER document (corpus-wide, in ppm).  This is the signal behind
-    exact-substring dedup (Lee et al. 2022): document-level near-dup
-    scores miss the case where only a boilerplate paragraph repeats
-    across otherwise-distinct pages, while span coverage surfaces
-    exactly the share of text a substring-dedup pass would cut.
+def q_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-cardinality sketch audit: per source, the corpus'
+    3-gram shingle cardinality counted EXACTLY next to the portable-
+    HLL estimate (``operators/sketches.hll_registers``), with the
+    observed error in ppm — "is 6.5 % error acceptable for my mixing
+    weights" answered with this corpus' own numbers.
 
-    Plan: one corpus explode → one shuffle of the gram stream keyed
-    (hash, doc, source) — grams never travel, 8-byte keys do — whose
-    groups are exactly one row per (gram, document), so the window
-    over the gram hash counts ROWS to get distinct-docs-per-gram (no
-    countDistinct expansion, which would cost an extra full-width
-    exchange); a final |sources| aggregate emits exact integer ppm.
-    Hash collisions could in principle glue two distinct grams
-    (p ~ n²/2^61 — negligible), and the oracle uses the same hash,
-    so both engines see the identical value."""
+    The sketch is built from engine-portable primitives (md5-derived
+    hash, bin()-ranked leading zeros, power-of-two harmonic terms as
+    exact longs, one pinned-integer division), so the DuckDB oracle
+    replays the estimate to the exact integer — the same
+    sketch-is-still-oracle-checkable property q_heavy_hitters
+    established for frequency.  At 100 TB the exact branch (a full
+    distinct shuffle of every unique shingle) is dropped and only the
+    register table survives: m = 256 rows per source, mergeable
+    across shards by per-bucket max, duplicates free.  Raw-regime
+    only by design here (n > 2.5 m holds at every SF — min ~1.1k vs
+    640); the operator exposes ``zero_regs`` for callers that need
+    the linear-counting branch."""
     from week4_musemotion_spark.functions.text import shingles, tokens
+    from week4_musemotion_spark.operators.sketches import hll_estimate, hll_registers
+
     from week4_musemotion_spark.sources.tables import spread
 
-    # spread: parallelize explode+hash above a single-row-group scan
-    d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
-    g = d.select(
-        "doc_id", "source", F.explode(shingles(tokens("text"), _SPAN_N)).alias("s")
-    ).select("doc_id", "source", stable_hash64(F.col("s")).alias("h"))
-    # one row per (gram, doc): cnt = occurrences of the gram in the doc
-    gd = g.groupBy("h", "doc_id", "source").agg(F.count(F.lit(1)).alias("cnt"))
-    w = gd.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy("h")))
-    dup = F.sum(F.when(F.col("nd") >= 2, F.col("cnt")).otherwise(F.lit(0)))
-    return w.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_spans"),
-        dup.cast("long").alias("dup_spans"),
-        int_div_trunc(dec(dup) * 1_000_000, F.sum("cnt")).alias("coverage_ppm"),
+    # spread: parallelize the explode+hash above a single-row-group
+    # scan (sources.tables.spread).  The sketch and the exact twin
+    # each re-explode from the spread frame: NOT branch-reuse-pinned,
+    # deliberately — checkpointing here would materialize the full
+    # exploded shingle STREAM (strings, ≫ corpus size)
+    d = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
+    s = d.select("source", F.explode(shingles(tokens("text"), 3)).alias("s"))
+    est = hll_estimate(hll_registers(s, ["source"], "s", p=_HLL_P), ["source"], p=_HLL_P)
+    ex = s.groupBy("source").agg(F.countDistinct("s").cast("long").alias("exact_distinct"))
+    return (
+        ex.join(est, "source")
+        .select(
+            "source",
+            "exact_distinct",
+            "hll_e2",
+            "zero_regs",
+            int_div_trunc(
+                F.abs(dec(F.col("hll_e2")) - dec(F.col("exact_distinct")) * 100)
+                * 1_000_000,
+                dec(F.col("exact_distinct")) * 100,
+            ).alias("err_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bloom-pruned join
+# ---------------------------------------------------------------------------
+
+def _bloom_part_pred():
+    """Dim-side predicate for the bloom-pruned join AND the bloom
+    fp audit (which provisions THIS join's filter — the two must size
+    the same key population): PROMO parts of size <= 10 (~6 % of
+    parts), selective enough that the runtime filter visibly shrinks
+    the fact side.  (A function — building a Column at import time
+    requires an active session.)"""
+    return (F.col("p_type") == "PROMO") & (F.col("p_size") <= 10)
+
+
+#: Unqualified (alias-free) SQL rendering of :func:`_bloom_part_pred`
+#: — valid wherever ``part`` is in scope, qualified or not.
+_BLOOM_PART_PRED_SQL = "p_type = 'PROMO' AND p_size <= 10"
+
+
+@query(
+    "q_bloom_pruned_join",
+    covers=("X-BLOOM-JOIN-PRUNE",),
+    oracle=f"""
+    SELECT p.p_brand,
+           CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+                    * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS BIGINT)
+               AS revenue_e4,
+           CAST(count(*) AS BIGINT) AS n_items
+    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE {_BLOOM_PART_PRED_SQL}
+    GROUP BY p.p_brand
+    """,
+)
+def q_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Selective fact⋈dim revenue rollup where the fact side is
+    pre-pruned by a bloom filter built from the dim's surviving join
+    keys (``operators/sketches.bloom_prune``) — the explicit runtime
+    semi-join filter for the 100 TB join shape where the dim is too
+    big to broadcast raw (its bloom is still KBs) and shuffling the
+    whole fact table for a 6 % -selective join wastes 94 % of the
+    exchange.  The bitmap is advisory: false positives are removed by
+    the equi-join itself, so the result is EXACT and the oracle is
+    the plain join — the same sketch-prunes-but-never-decides
+    contract as q_heavy_hitters and q_distinct_sketch.  (At this
+    test scale Catalyst would broadcast the dim anyway; the plan
+    still shows the membership predicate on the scan side of the
+    exchange, which is the 1000-executor story.)"""
+    from week4_musemotion_spark.functions.exact import cents
+    from week4_musemotion_spark.operators.sketches import bloom_prune
+    from week4_musemotion_spark.queries.tpch import _disc_pct
+
+    part = load_table(spark, sf_dir, "part").filter(_bloom_part_pred())
+    li = load_table(spark, sf_dir, "lineitem")
+    pruned = bloom_prune(li, part.select("p_partkey"), "l_partkey", "p_partkey")
+    return (
+        pruned.join(part, pruned.l_partkey == part.p_partkey)
+        .groupBy("p_brand")
+        .agg(
+            F.sum(cents("l_extendedprice") * (100 - _disc_pct()))
+            .cast("long")
+            .alias("revenue_e4"),
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+        )
     )
 
 
@@ -212,7 +321,6 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_positions,
         bloom_words,
     )
-    from week4_musemotion_spark.queries.staged_r7 import _bloom_part_pred
 
     part = load_table(spark, sf_dir, "part").filter(_bloom_part_pred())
     # pinned: dimk feeds the position build (eager collect) plus the
@@ -352,8 +460,6 @@ def q_source_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_alpha_e7,
         hll_registers,
     )
-    from week4_musemotion_spark.queries.staged_r7 import _HLL_M, _HLL_P, _HLL_W1
-
     from week4_musemotion_spark.sources.tables import spread
 
     d = spread(load_table(spark, sf_dir, "documents").select("source", "text"))
@@ -743,102 +849,6 @@ def q_stream_distinct_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Embedding-cosine threshold sweep
-# ---------------------------------------------------------------------------
-
-#: Cosine-threshold grid (e6 fixed-point), above the pair-generation
-#: base EMBED_DUP_THRESHOLD so the grid compare runs on the ROUNDED
-#: integer cosine — exact on both engines; 510000 sits above this
-#: corpus' organic maximum (~0.51) and exercises the empty row.
-_SEM_SWEEP = (450000, 470000, 490000, 510000)
-
-
-@query(
-    "q_semantic_threshold_sweep",
-    covers=("X-SEM-THRESHOLD-SWEEP",),
-    oracle="""
-    WITH p AS (
-        SELECT a.vec_id AS vec_id_a, a.embedding AS va,
-               b.vec_id AS vec_id_b, b.embedding AS vb
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    ),
-    s AS (
-        SELECT vec_id_a, vec_id_b,
-               {cos} AS cos
-        FROM p
-    ),
-    pe AS (
-        SELECT vec_id_a, vec_id_b,
-               CAST(floor(cos * 1000000 + 0.5) AS BIGINT) AS cosine_e6
-        FROM s WHERE cos >= {base}
-    ),
-    grid AS (SELECT CAST(unnest([{grid}]) AS BIGINT) AS thr_e6),
-    q AS (
-        SELECT g.thr_e6, p.vec_id_a, p.vec_id_b
-        FROM grid g LEFT JOIN pe p ON p.cosine_e6 >= g.thr_e6
-    ),
-    dc AS (
-        SELECT thr_e6, CAST(count(DISTINCT v) AS BIGINT) AS n_dup_vecs
-        FROM (SELECT thr_e6, unnest([vec_id_a, vec_id_b]) AS v FROM q WHERE vec_id_a IS NOT NULL)
-        GROUP BY thr_e6
-    )
-    SELECT n.thr_e6, n.n_pairs, COALESCE(dc.n_dup_vecs, 0) AS n_dup_vecs
-    FROM (SELECT thr_e6, CAST(count(vec_id_a) AS BIGINT) AS n_pairs FROM q GROUP BY thr_e6) n
-    LEFT JOIN dc ON dc.thr_e6 = n.thr_e6
-    """.format(
-        cos=_COSINE_SQL_FRAG.format(a="va", b="vb"),
-        base=EMBED_DUP_THRESHOLD,
-        grid=", ".join(map(str, _SEM_SWEEP)),
-    ),
-)
-def q_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-threshold selection curve for embeddings: per
-    candidate cosine threshold, the pair count and the vectors those
-    pairs touch — the embedding-space twin of the Jaccard sweep
-    (q_dedup_threshold_sweep), read before fixing the semantic-dedup
-    cut (too low: distinct content merged; too high: paraphrase
-    clusters survive).  Thresholds compare against the rounded-e6
-    integer cosine, so the grid is exact on both engines; only the
-    pair-generation base uses the float cosine, at the same
-    engine-stable threshold q_dedup_embedding already pins.
-
-    Scale: the pair table is computed ONCE (block-nested-loop here —
-    the exact baseline; cosine_pairs_lsh at 100 TB feeds the same
-    sweep) and the grid fan-out runs over that tiny frame."""
-    from week4_musemotion_spark.operators.similarity import cosine_pairs
-    from week4_musemotion_spark.queries.extensions import EMBED_DUP_THRESHOLD
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = cosine_pairs(emb, EMBED_DUP_THRESHOLD).localCheckpoint(eager=False)
-    # lazy: both grid aggregate branches share the checkpointed RDD
-    # inside the one final job — the eager form paid a separate
-    # blocking pair-build job first
-    grid = spark.createDataFrame([(t,) for t in _SEM_SWEEP], "thr_e6 long")
-    # broadcast-grid crossJoin, NOT a grid⋈pairs theta join (Catalyst
-    # plans that as a task-exploding CartesianProduct — see
-    # q_dedup_threshold_sweep); empty thresholds recovered by
-    # left-joining the grid onto the aggregates
-    hits = pairs.crossJoin(F.broadcast(grid)).filter(
-        F.col("cosine_e6") >= F.col("thr_e6")
-    )
-    n_pairs = hits.groupBy("thr_e6").agg(F.count(F.lit(1)).cast("long").alias("np"))
-    vecs = (
-        hits.select("thr_e6", F.explode(F.array("vec_id_a", "vec_id_b")).alias("v"))
-        .groupBy("thr_e6")
-        .agg(F.countDistinct("v").cast("long").alias("nd"))
-    )
-    return (
-        grid.join(n_pairs, "thr_e6", "left")
-        .join(vecs, "thr_e6", "left")
-        .select(
-            "thr_e6",
-            F.coalesce(F.col("np"), F.lit(0).cast("long")).alias("n_pairs"),
-            F.coalesce(F.col("nd"), F.lit(0).cast("long")).alias("n_dup_vecs"),
-        )
-    )
-
-
 #: Precision-fold grid: build once at p=11 (2048 registers/source),
 #: fold down to each audited precision.  The grid's point is the
 #: ONE-PASS contract — fold(build(11), q) == build(q) exactly — so
@@ -849,7 +859,7 @@ _FOLD_GRID = (10, 9, 8)
 
 def _fold_rho_sql(p: int, h: str = "h") -> str:
     """Oracle rho at an arbitrary precision (the p-parameterized twin
-    of staged_r7._hll_rho_sql)."""
+    of :func:`_hll_rho_sql`)."""
     w1 = 60 - p + 1
     return (
         f"CASE WHEN ({h} >> {p}) = 0 THEN {w1} "
@@ -1058,208 +1068,383 @@ def q_hll_fold_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Johnson-Lindenstrauss projection distortion audit
+# Streaming daily-count store report (fixture-driven, value-oracled)
 # ---------------------------------------------------------------------------
 
-#: JL target-dim grid — NESTED prefixes of one projection at the grid
-#: maximum (operators/linalg.rp_signs rows are seed-deterministic, so
-#: the t=8 matrix is the first 8 rows of the t=32 one): ONE corpus
-#: pass serves the whole grid via array slices.
-_RP_GRID = (32, 16, 8)
-_RP_IN_DIM = 64
-_RP_SEED = 6
+_COUNT_BATCHES = 3
 
 
-def _rp_cos_sql(a: str, b: str) -> str:
-    """Guarded cosine over projected (DOUBLE) slices — same fold
-    order as the Spark side's cosine_similarity, NULL on zero norm
-    (DuckDB would otherwise emit IEEE inf where Spark guards)."""
-    na = f"sqrt(list_sum(list_transform({a}, x -> x * x)))"
-    nb = f"sqrt(list_sum(list_transform({b}, x -> x * x)))"
-    d = (
-        f"list_sum(list_transform(range(1, len({a}) + 1),"
-        f" i -> {a}[i] * {b}[i]))"
+def _build_count_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """Run the REAL streaming sink body deterministically: events
+    split into ordered micro-batches by event_id residue, each pushed
+    through make_count_sink (the foreachBatch body).  Batch 1 is
+    pushed TWICE — a committed-batch replay — so the exactly-once
+    marker protocol is part of what the value oracle certifies (an
+    additive store without markers would double-count and fail the
+    hash compare)."""
+    import os
+
+    from week4_musemotion_spark.streaming.counts import make_count_sink
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
+    sink = make_count_sink(["event_type"], os.path.join(tmp, "store"))
+    for b in range(_COUNT_BATCHES):
+        sink(ev.filter(F.col("event_id") % _COUNT_BATCHES == b), b)
+        if b == 1:
+            sink(ev.filter(F.col("event_id") % _COUNT_BATCHES == b), b)  # replay
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+
+def _count_store_fixture(spark: SparkSession, sf_dir: str) -> str:
+    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
+
+    return cached_fixture(
+        "musemotion_count_store",
+        sf_dir,
+        f"count_store:{_COUNT_BATCHES}".encode(),
+        lambda tmp: _build_count_store(spark, sf_dir, tmp),
+        table="events",  # fingerprint the table the store is BUILT from
     )
-    return f"CASE WHEN {na} * {nb} > 0 THEN {d} / ({na} * {nb}) END"
 
 
-def _rp_block_sql(t: int) -> str:
-    ratio = (
-        f"CAST(floor((list_sum(list_transform(y[1:{t}], v -> v * v))"
-        f" / (CAST({t} AS DOUBLE) * nx2)) * 1000000 + 0.5) AS BIGINT)"
+@query(
+    "q_stream_counts_report",
+    covers=("X-STREAM-COUNTS",),
+    oracle=f"""
+    SELECT event_type,
+           CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day_idx,
+           CAST(count(*) AS BIGINT) AS cnt
+    FROM events GROUP BY 1, 2
+    """,
+)
+def q_stream_counts_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming daily-count store read back: events pushed
+    through the REAL foreachBatch body (streaming/counts.py) in
+    ordered micro-batches — WITH one committed batch replayed — then
+    the committed partial log folded to totals.  The oracle is the
+    plain batch daily count, so a hash match certifies the additive
+    txn-marker protocol end to end: partials appended exactly once
+    under replay, torn attempts excluded, fold equals truth.
+
+    This is the additive-state counterpart of q_stream_distinct_report
+    (whose HLL store is exactly-once by idempotent-merge algebra and
+    needs no markers) — together the two queries pin BOTH branches of
+    the streaming design rule under the value oracle."""
+    import os
+
+    from week4_musemotion_spark.streaming.counts import read_daily_counts
+
+    fixture = _count_store_fixture(spark, sf_dir)
+    out = read_daily_counts(spark, os.path.join(fixture, "store"))
+    return out.select(
+        "event_type", F.col("day_idx").cast("long"), F.col("cnt").cast("long")
     )
-    return f"""err_{t} AS (
-        SELECT abs(CAST(floor(({_rp_cos_sql('sa', 'sb')}) * 1000000 + 0.5) AS BIGINT)
-                   - cosine_e6) AS aerr
-        FROM (SELECT ya[1:{t}] AS sa, yb[1:{t}] AS sb, cosine_e6 FROM pj)
-    ),
-    perr_{t} AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(COALESCE(CAST(sum(aerr) AS HUGEINT), 0)
-                    // greatest(count(*), 1) AS BIGINT) AS mean_abs_err_e6,
-               CAST(COALESCE(max(aerr), 0) AS BIGINT) AS max_abs_err_e6
-        FROM err_{t}
-    ),
-    nr_{t} AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-               CAST(CAST(sum(ratio_e6) AS HUGEINT) // count(*) AS BIGINT)
-                   AS mean_norm_ratio_e6,
-               CAST(min(ratio_e6) AS BIGINT) AS min_norm_ratio_e6,
-               CAST(max(ratio_e6) AS BIGINT) AS max_norm_ratio_e6
-        FROM (SELECT {ratio} AS ratio_e6 FROM proj WHERE nx2 > 0)
-    ),
-    block_{t} AS (
-        SELECT CAST({t} AS BIGINT) AS t, p.n_pairs, p.mean_abs_err_e6,
-               p.max_abs_err_e6, n.n_vecs, n.mean_norm_ratio_e6,
-               n.min_norm_ratio_e6, n.max_norm_ratio_e6
-        FROM perr_{t} p, nr_{t} n
-    )"""
 
 
-def _rp_oracle_sql() -> str:
-    from week4_musemotion_spark.operators.linalg import rp_signs, rp_signs_sql
+def _compacted_count_store_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """The count-store fixture after ``compact_counts`` folded the
+    committed partial log into one batch — built by copying the base
+    fixture (content-identical by the compaction contract) and
+    compacting the copy."""
+    import os
+    import shutil
 
-    signs = rp_signs(_RP_IN_DIM, max(_RP_GRID), _RP_SEED)
-    blocks = ",\n    ".join(_rp_block_sql(t) for t in _RP_GRID)
-    union = "\n    UNION ALL ".join(f"SELECT * FROM block_{t}" for t in _RP_GRID)
-    return f"""
-    WITH proj AS (
-        SELECT vec_id,
-               list_transform({rp_signs_sql(signs)},
-                   row -> list_sum(list_transform(range(1, {_RP_IN_DIM + 1}),
-                          i -> CAST(embedding[i] AS DOUBLE) * row[i]))) AS y,
-               list_sum(list_transform(embedding,
-                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nx2
+    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
+    from week4_musemotion_spark.streaming.counts import compact_counts
+
+    base = _count_store_fixture(spark, sf_dir)
+
+    def _build(tmp: str) -> None:
+        shutil.copytree(base, tmp, dirs_exist_ok=True)
+        # the copied base marker must not pre-certify the compacted
+        # build (same invariant as the gate's compacted fixture)
+        os.remove(os.path.join(tmp, "_SUCCESS"))
+        compact_counts(spark, os.path.join(tmp, "store"))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return cached_fixture(
+        "musemotion_count_store_compacted",
+        sf_dir,
+        f"count_store_compacted:{_COUNT_BATCHES}".encode(),
+        _build,
+        table="events",
+    )
+
+
+@query(
+    "q_stream_counts_compacted",
+    covers=("X-STREAM-COUNTS-COMPACT",),
+    oracle=f"""
+    SELECT event_type,
+           CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day_idx,
+           CAST(count(*) AS BIGINT) AS cnt
+    FROM events GROUP BY 1, 2
+    """,
+)
+def q_stream_counts_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SAME totals after ``compact_counts`` folded the partial
+    log into one ``bid-c1`` batch — driver evidence that the
+    manifest-flip compaction is content-preserving: the oracle is
+    IDENTICAL to q_stream_counts_report's, so a fold that
+    double-counts a batch (originals + compacted both read), drops
+    one, or mutates a cell hash-fails.  Compaction is what keeps a
+    month-old monitor's read at O(groups × days) instead of
+    O(#micro-batches) file opens."""
+    import os
+
+    from week4_musemotion_spark.streaming.counts import read_daily_counts
+
+    fixture = _compacted_count_store_fixture(spark, sf_dir)
+    out = read_daily_counts(spark, os.path.join(fixture, "store"))
+    return out.select(
+        "event_type", F.col("day_idx").cast("long"), F.col("cnt").cast("long")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Quantile sketches
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_len_quantiles",
+    covers=("X-QSKETCH-LEN",),
+    oracle="WITH src AS (SELECT source, length(text) AS v FROM documents)"
+    + quantiles_sql("src", ["source"], "v"),
+)
+def q_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source document-length quantiles (p50/p90/p99 lower
+    bounds) off the portable quarter-octave log-bucket sketch — the
+    table that sizes shards, row groups, and sequence-packing bins.
+    Sketch semantics (< 25 % relative under-read, exact integers,
+    engine-replayable) in ``operators/qsketch.py``.
+
+    Scale shape: ONE grouped count collapses the corpus to at most
+    ~260 bucket rows per source (map-side combined — the shuffle
+    carries buckets, not documents); the readout is window math on
+    that tiny frame.  Partials merge by summing counts, so the same
+    sketch state serves incremental refresh."""
+    d = load_table(spark, sf_dir, "documents")
+    counts = bucket_counts(d.select("source", F.length("text").alias("v")), ["source"], "v")
+    return quantiles_from_counts(counts, ["source"])
+
+
+@query(
+    "q_embed_norm_quantiles",
+    covers=("X-QSKETCH-NORM",),
+    oracle="""WITH src AS (
+        SELECT label,
+               CAST(floor(sqrt(list_sum(list_transform(embedding,
+                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 1000000 + 0.5) AS BIGINT) AS v
         FROM embeddings
-    ),
-    cosraw AS (
-        SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-               {_COSINE_SQL_FRAG.format(a="a.embedding", b="b.embedding")} AS cos
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    ),
-    pe AS (
-        SELECT vec_id_a, vec_id_b,
-               CAST(floor(cos * 1000000 + 0.5) AS BIGINT) AS cosine_e6
-        FROM cosraw WHERE cos >= {EMBED_DUP_THRESHOLD}
-    ),
-    pj AS (
-        SELECT pe.cosine_e6, pa.y AS ya, pb.y AS yb
-        FROM pe JOIN proj pa ON pa.vec_id = pe.vec_id_a
-                JOIN proj pb ON pb.vec_id = pe.vec_id_b
-    ),
-    {blocks}
-    {union}
-    """
+    )"""
+    + quantiles_sql("src", ["label"], "v"),
+)
+def q_embed_norm_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-norm quantiles per label off the same log-bucket
+    sketch: the norm-drift monitor — a label whose p50 norm moves an
+    octave between corpus versions means a broken encoder batch or a
+    normalization change, caught from O(labels × buckets) state.
+    Norm quantization (floor(|v|·1e6 + 0.5), sequential fold order)
+    is shared with q_embedding_hygiene so the two monitors can never
+    disagree on the same vector."""
+    from week4_musemotion_spark.queries.semantic import _dot
+
+    e = load_table(spark, sf_dir, "embeddings")
+    v = F.floor(
+        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))) * 1_000_000 + F.lit(0.5)
+    ).cast("long")
+    counts = bucket_counts(e.select("label", v.alias("v")), ["label"], "v")
+    return quantiles_from_counts(counts, ["label"])
+
+#: Micro-batch count for the replayed corpus stream.
+_QS_BATCHES = 6
 
 
-@query("q_rp_distortion", covers=("X-RP-DISTORTION",), oracle=_rp_oracle_sql())
-def q_rp_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss projection distortion audit: ONE ±1
-    sign projection (``operators/linalg.rp_project``, Achlioptas
-    2003 / JL lemma) at the grid-max target dim, prefix-sliced to
-    each candidate dim, scored two ways — (a) projected-vs-full
-    cosine error over the exact near-dup pair set (the pairs a
-    semantic dedup actually decides on) and (b) the per-vector norm
-    preservation ratio |y_t|²/(t·|x|²), whose expectation is exactly
-    1 under Rademacher signs.
+def _build_qsketch_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    """Drive the sink exactly as a foreachBatch stream would, plus the
+    two fault-injection moves a test must pin: one batch REPLAYED
+    (marker short-circuit) and one mid-stream compaction (manifest
+    flip) — if either broke exactly-once, the oracle diff would
+    catch it as a wrong bucket count."""
+    from week4_musemotion_spark.streaming.counts import compact_counts
+    from week4_musemotion_spark.streaming.quantiles import make_qsketch_sink
 
-    Answers, with data: "how far can I shrink the embedding dim
-    before my dedup threshold starts misfiring?"  At 100 TB the
-    projection is a pure codegen map (no shuffle, no Python) and
-    every downstream cost — ANN scoring, LSH sketching, pair
-    verification — scales by t/d; the grid costs one projection pass
-    because the sign rows are nested (the fold-family one-pass
-    contract, for dimensionality).  The oracle replays the sign
-    matrix literal, every fold (left-to-right, bit-identical), the
-    pair set, and the fixed-point encoding.
-    """
-    from week4_musemotion_spark.functions.vector import cosine_similarity
-    from week4_musemotion_spark.operators.linalg import rp_project, rp_signs
-    from week4_musemotion_spark.operators.similarity import cosine_e6, cosine_pairs
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    signs = rp_signs(_RP_IN_DIM, max(_RP_GRID), _RP_SEED)
-    nx2 = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", F.length("text").alias("doc_len")
     )
-    # one projection pass serves the pair sides AND every grid dim —
-    # pin it (lazy: each consumer is itself one narrow pass)
-    proj = emb.select(
-        "vec_id", rp_project("embedding", signs).alias("y"), nx2.alias("nx2")
-    ).localCheckpoint(eager=False)
-    # the near-dup pair set is tiny relative to the corpus — eager
-    # pin, then hash-join the projected sides in
-    # lazy: single consumer (pj) — materialized by the final job
-    pairs = cosine_pairs(emb, EMBED_DUP_THRESHOLD).localCheckpoint(eager=False)
-    pj = (
-        pairs.join(
-            proj.select(F.col("vec_id").alias("vec_id_a"), F.col("y").alias("ya")),
-            "vec_id_a",
+    store = os.path.join(tmp, "store")
+    sink = make_qsketch_sink(["source"], "doc_len", store)
+    for b in range(_QS_BATCHES):
+        batch = d.filter(F.col("doc_id") % _QS_BATCHES == b)
+        sink(batch, b)
+        if b == 1:
+            sink(batch, b)  # replay: the commit marker must no-op it
+        if b == 3:
+            compact_counts(spark, store)  # fold the first four batches
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+
+def _qsketch_store_fixture(spark: SparkSession, sf_dir: str) -> str:
+    from week4_musemotion_spark.queries.pipeline_ops import cached_fixture
+
+    return cached_fixture(
+        "musemotion_qsketch_store",
+        sf_dir,
+        f"qsketch_store:{_QS_BATCHES}".encode(),
+        lambda tmp: _build_qsketch_store(spark, sf_dir, tmp),
+        table="documents",  # fingerprint the table the store is BUILT from
+    )
+
+
+@query(
+    "q_stream_len_quantiles",
+    covers=("X-STREAM-QSKETCH",),
+    oracle="WITH src AS (SELECT source, length(text) AS v FROM documents)"
+    + quantiles_sql("src", ["source"], "v"),
+)
+def q_stream_len_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source length quantiles from the STREAMING sketch store —
+    the unbounded-corpus form of q_len_quantiles.  The fixture
+    replays the corpus as micro-batches through the txn-marker sink
+    (one batch duplicated, the log compacted mid-stream), and the
+    readout folds only committed, not-yet-folded partials; the
+    oracle is the BATCH quantile SQL over the whole table, which the
+    streamed result must match to the digit because bucket-count
+    merge is exact addition.  One oracle therefore pins the sketch
+    arithmetic, the marker protocol, and the compaction manifest
+    flip in a single hash.
+
+    Scale shape: each micro-batch writes O(|batch| → buckets) rows;
+    read-side state is O(sources × ~260) regardless of stream
+    length; compaction keeps the log's file count bounded."""
+    from week4_musemotion_spark.streaming.quantiles import read_quantiles
+
+    tmp = _qsketch_store_fixture(spark, sf_dir)
+    return read_quantiles(
+        spark,
+        os.path.join(tmp, "store"),
+        ["source"],
+        empty_schema="source string, bucket int, cnt long",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact-selection quantiles (the sketch's exact twin)
+# ---------------------------------------------------------------------------
+
+_EXACT_PS = (("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
+
+
+@query(
+    "q_len_quantiles_exact",
+    covers=("X-QUANTILE-EXACT",),
+    oracle="""
+    WITH c AS (
+        SELECT source, length(text) AS v, count(*) AS cnt
+        FROM documents GROUP BY 1, 2
+    ),
+    w AS (
+        SELECT source, v, cnt,
+               sum(cnt) OVER (PARTITION BY source ORDER BY v
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+               sum(cnt) OVER (PARTITION BY source) AS n
+        FROM c
+    )
+    SELECT source, CAST(max(n) AS BIGINT) AS n,
+           CAST(min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN v END) AS BIGINT) AS p50,
+           CAST(min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN v END) AS BIGINT) AS p90,
+           CAST(min(CASE WHEN cum >= (n * 99 + 99) // 100 THEN v END) AS BIGINT) AS p99
+    FROM w GROUP BY source
+    """,
+)
+def q_len_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT per-source length quantiles by distributed selection:
+    group by (source, value), cumulative-count window ordered by
+    value, take the smallest value whose cumulative count reaches
+    ceil(p·n) — the same readout arithmetic as the log-bucket sketch
+    but over exact values, so the answer is the true order statistic.
+
+    Strategy triple (each a different state/exactness trade on the
+    same semantics): q_group_quantiles ranks EVERY ROW in its group
+    (fine when groups are small); this path first compresses to a
+    (value -> count) histogram, so state is |distinct values| —
+    lengths, ratings, ages; the q_len_quantiles sketch caps state at
+    ~260 log buckets for unbounded domains at the price of a < 25 %
+    under-read.  The sketch's lower-bound contract (sketch_p <=
+    exact_p, within a quarter octave) is pinned against this query
+    in pytest."""
+    from pyspark.sql import Window
+    from week4_musemotion_spark.functions.exact import int_div_trunc
+
+    d = load_table(spark, sf_dir, "documents")
+    c = d.groupBy("source", F.length("text").alias("v")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    wc = (
+        Window.partitionBy("source")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wn = Window.partitionBy("source")
+    w = c.withColumn("cum", F.sum("cnt").over(wc)).withColumn(
+        "n", F.sum("cnt").over(wn)
+    )
+    aggs = [F.max("n").cast("long").alias("n")]
+    for name, pn, pd_ in _EXACT_PS:
+        k = int_div_trunc(F.col("n") * pn + (pd_ - 1), F.lit(pd_))
+        aggs.append(
+            F.min(F.when(F.col("cum") >= k, F.col("v"))).cast("long").alias(name)
         )
+    return w.groupBy("source").agg(*aggs)
+
+
+# ---------------------------------------------------------------------------
+# Money quantiles per nation (sketch x dimension join)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_price_quantiles_nation",
+    covers=("X-QSKETCH-MONEY",),
+    oracle="""WITH src AS (
+        SELECT n.n_name AS nation, CAST(round(o.o_totalprice * 100) AS BIGINT) AS v
+        FROM orders o
+        JOIN customer c ON c.c_custkey = o.o_custkey
+        JOIN nation n ON n.n_nationkey = c.c_nationkey
+    )"""
+    + quantiles_sql("src", ["nation"], "v"),
+)
+def q_price_quantiles_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-value quantiles (p50/p90/p99 of exact integer cents) per
+    customer nation off the log-bucket sketch — the business-side
+    exercise of ``operators/qsketch``: what a revenue dashboard's
+    "typical vs whale order by market" tile reads, at O(nations ×
+    ~260) state instead of a per-nation sort.
+
+    Scale shape: the nation attribution joins BELOW the sketch build
+    — orders ⋈ customer shuffles on the customer key once (or rides
+    bucketed layouts at scale), nation broadcasts, and only then
+    does the grouped bucket count collapse everything; the quantile
+    readout never sees a row of fact data.  Money enters as exact
+    cents (``functions/exact.cents``) so the bucket boundaries are
+    engine-identical."""
+    from week4_musemotion_spark.functions.exact import cents
+    from week4_musemotion_spark.operators.qsketch import (
+        bucket_counts,
+        quantiles_from_counts,
+    )
+
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    src = (
+        o.select("o_custkey", cents(F.col("o_totalprice")).alias("v"))
+        .join(c.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            proj.select(F.col("vec_id").alias("vec_id_b"), F.col("y").alias("yb")),
-            "vec_id_b",
+            F.broadcast(n.select("n_nationkey", F.col("n_name").alias("nation"))),
+            F.col("c_nationkey") == F.col("n_nationkey"),
         )
-        .select("cosine_e6", "ya", "yb")
-        .localCheckpoint(eager=False)
+        .select("nation", "v")
     )
-    # FUSED grid (optimization r12): the per-t formulation ran one
-    # aggregation job over pj AND one over proj per grid dim — at 100
-    # TB that is |grid| extra scans of the corpus-sized projection
-    # checkpoint (and 2·|grid| AQE stages locally).  Every per-t
-    # statistic is computed in ONE pass over each frame instead (same
-    # expressions per t, byte-identical arithmetic), then the single
-    # (1 x 8·|grid|)-column row is unpivoted driver-free via a
-    # struct explode.  Oracle unchanged.
-    perr_aggs, nr_aggs = [], []
-    for t in _RP_GRID:
-        aerr = F.abs(
-            cosine_e6(cosine_similarity(F.slice("ya", 1, t), F.slice("yb", 1, t)))
-            - F.col("cosine_e6")
-        )
-        perr_aggs += [
-            int_div_trunc(
-                F.coalesce(F.sum(aerr), F.lit(0)),
-                F.greatest(F.count(F.lit(1)), F.lit(1)),
-            ).alias(f"mean_abs_err_e6_{t}"),
-            F.coalesce(F.max(aerr), F.lit(0)).cast("long").alias(f"max_abs_err_e6_{t}"),
-        ]
-        nyt = F.aggregate(
-            F.transform(F.slice("y", 1, t), lambda v: v * v),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        ratio_e6 = cosine_e6(nyt / (F.lit(float(t)) * F.col("nx2")))
-        nr_aggs += [
-            int_div_trunc(F.sum(ratio_e6), F.count(F.lit(1))).alias(
-                f"mean_norm_ratio_e6_{t}"
-            ),
-            F.min(ratio_e6).cast("long").alias(f"min_norm_ratio_e6_{t}"),
-            F.max(ratio_e6).cast("long").alias(f"max_norm_ratio_e6_{t}"),
-        ]
-    perr = pj.agg(F.count(F.lit(1)).cast("long").alias("n_pairs"), *perr_aggs)
-    nr = proj.filter(F.col("nx2") > 0).agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"), *nr_aggs
-    )
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(t).cast("long").alias("t"),
-                F.col("n_pairs"),
-                F.col(f"mean_abs_err_e6_{t}").alias("mean_abs_err_e6"),
-                F.col(f"max_abs_err_e6_{t}").alias("max_abs_err_e6"),
-                F.col("n_vecs"),
-                F.col(f"mean_norm_ratio_e6_{t}").alias("mean_norm_ratio_e6"),
-                F.col(f"min_norm_ratio_e6_{t}").alias("min_norm_ratio_e6"),
-                F.col(f"max_norm_ratio_e6_{t}").alias("max_norm_ratio_e6"),
-            )
-            for t in _RP_GRID
-        ]
-    )
-    return (
-        perr.crossJoin(nr)
-        .select(F.explode(rows).alias("_r"))
-        .select("_r.*")
-    )
+    return quantiles_from_counts(bucket_counts(src, ["nation"], "v"), ["nation"])

@@ -20,6 +20,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from week4_musemotion_spark.functions.eventtime import epoch_micros
+from week4_musemotion_spark.functions.exact import dec, int_div_trunc
+from week4_musemotion_spark.functions.hashing import stable_hash64, stable_hash64_sql
+from week4_musemotion_spark.operators.qsketch import (
+    bucket_range_sql_cte,
+    bucket_range_table,
+    log_bucket_sql,
+)
 from week4_musemotion_spark.queries.registry import query
 from week4_musemotion_spark.sources.tables import load_table
 
@@ -421,4 +428,163 @@ def q_hourly_event_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Watermark-delay tuning (deterministic simulated out-of-order replay)
+# ---------------------------------------------------------------------------
+
+#: Watermark grid (seconds) and jitter bound (µs).  The jitter must
+#: exceed the stream's typical inter-event gap or nothing ever
+#: arrives out of order (the sf0.001 per-type median gap is ~2.3 h),
+#: so the replay jitters up to 4 h; the 4 h delay row MUST then read
+#: zero late events — a built-in certificate — while 0 and 1 h
+#: produce the real tuning signal at every test SF.
+_WM_DELAYS_S = (0, 3600, 14400)
+_WM_JITTER_US = 14_400 * 1_000_000
+
+
+@query(
+    "q_watermark_audit",
+    covers=("X-STREAM-WATERMARK",),
+    oracle=f"""
+    WITH e AS (
+        SELECT event_type, event_id, epoch_us(ts) AS us,
+               epoch_us(ts) + ({stable_hash64_sql("CAST(event_id AS VARCHAR)")} % {_WM_JITTER_US}) AS arr
+        FROM events
+    ),
+    w AS (
+        SELECT event_type, us,
+               max(us) OVER (PARTITION BY event_type ORDER BY arr, us, event_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS wm
+        FROM e
+    )
+    SELECT event_type, CAST(g.delay_s AS BIGINT) AS delay_s,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(*) FILTER (us < wm - CAST(g.delay_s AS BIGINT) * 1000000) AS BIGINT) AS n_late,
+           CAST(CAST(count(*) FILTER (us < wm - CAST(g.delay_s AS BIGINT) * 1000000) AS HUGEINT)
+                * 1000000 // count(*) AS BIGINT) AS late_ppm
+    FROM w CROSS JOIN (SELECT unnest([{", ".join(map(str, _WM_DELAYS_S))}]) AS delay_s) g
+    GROUP BY 1, 2
+    """,
+)
+def q_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermark-delay tuning table: how many events a Structured-
+    Streaming watermark of X seconds would have dropped, per event
+    type, over a delay grid.  The testdata arrives perfectly
+    ts-ordered (zero natural lateness — a dead signal), so the audit
+    REPLAYS the stream under a deterministic simulated network: each
+    event's arrival position is its event time plus a portable-hash
+    jitter in [0, 4 h) — above the stream's multi-hour per-type gap
+    scale, else nothing ever reorders; synthesized pathology,
+    engine-identical on both sides (the q_pii_scrub pattern).  An
+    event is late when its event time precedes the running max event
+    time of earlier ARRIVALS minus the delay — exactly the
+    max-event-time watermark Structured Streaming maintains.  The
+    4 h row must read 0 (lateness is strictly bounded by the jitter
+    span): a built-in certificate that the replay and the accounting
+    agree.
+
+    Scale shape: one scan, one per-type ordered window (running
+    max — partition-parallel), a 3-row broadcast grid, one grouped
+    count.  At 100 TB the window keys by event_type; a single
+    global stream would use the two-pass chunked cummax instead."""
+    ev = load_table(spark, sf_dir, "events")
+    us = epoch_micros(ev)
+    e = ev.select(
+        "event_type",
+        "event_id",
+        us.alias("us"),
+        (us + F.pmod(stable_hash64(F.col("event_id").cast("string")), F.lit(_WM_JITTER_US))).alias("arr"),
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("arr", "us", "event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    g = F.explode(F.array(*[F.lit(s).cast("long") for s in _WM_DELAYS_S])).alias("delay_s")
+    # delay * 1e6 overflows int32 — keep the arithmetic in longs
+    late = F.col("us") < F.col("wm") - F.col("delay_s") * F.lit(1_000_000).cast("long")
+    return (
+        e.withColumn("wm", F.max("us").over(w))
+        .select("event_type", "us", "wm", g)
+        .groupBy("event_type", "delay_s")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.count(F.when(late, 1)).cast("long").alias("n_late"),
+            int_div_trunc(
+                dec(F.count(F.when(late, 1))) * 1_000_000, F.count(F.lit(1))
+            ).alias("late_ppm"),
+        )
+        .withColumn("delay_s", F.col("delay_s").cast("long"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Session-gap histogram
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_gap_histogram",
+    covers=("X-SESSION-GAP-DIST",),
+    oracle=f"""
+    WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+    gp AS (
+        SELECT (us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id)) // 1000000 AS gap_s
+        FROM e
+    ),
+    g AS (SELECT gap_s FROM gp WHERE gap_s IS NOT NULL),
+    c AS (SELECT {log_bucket_sql("gap_s")} AS bucket,
+               count(*) AS n_gaps
+        FROM g GROUP BY 1
+    )
+    SELECT c.bucket, lbt.lb AS lb_s, lbt.ub AS ub_s,
+           CAST(n_gaps AS BIGINT) AS n_gaps,
+           CAST(sum(n_gaps) OVER (ORDER BY c.bucket
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                * CAST(1000000 AS HUGEINT) // sum(n_gaps) OVER () AS BIGINT) AS cum_ppm
+    FROM c JOIN {bucket_range_sql_cte()} lbt ON c.bucket = lbt.bucket
+    """,
+)
+def q_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inter-event gap histogram per user stream on log buckets,
+    with the cumulative share of gaps at or below each bucket — the
+    curve that picks a sessionization timeout: the knee where
+    cum_ppm flattens separates intra-session rhythm from
+    between-visit silence, and reading it off quarter-octave buckets
+    is exactly as actionable as exact percentiles at a fraction of
+    the state.  Exact integers end to end (µs epochs, bucket ids,
+    ppm by integer division).
+
+    Scale shape: per-user lag window (partition-parallel, the same
+    shuffle sessionization itself pays), then the corpus collapses
+    to ≤ ~260 bucket rows; the cumulative window runs on that tiny
+    frame."""
+    from week4_musemotion_spark.operators.qsketch import log_bucket
+
+    ev = load_table(spark, sf_dir, "events")
+    e = ev.select("user_id", "event_id", epoch_micros(ev).alias("us"))
+    wl = Window.partitionBy("user_id").orderBy("us", "event_id")
+    gap_s = int_div_trunc(F.col("us") - F.lag("us").over(wl), F.lit(1_000_000))
+    g = (
+        e.select(gap_s.alias("gap_s"))
+        .filter(F.col("gap_s").isNotNull())
+        .groupBy(log_bucket(F.col("gap_s")).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("n_gaps"))
+    )
+    wc = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    wt = Window.partitionBy()
+    return (
+        g.join(F.broadcast(bucket_range_table(g)), "bucket")
+        .select(
+            "bucket",
+            F.col("lb").alias("lb_s"),
+            F.col("ub").alias("ub_s"),
+            F.col("n_gaps").cast("long").alias("n_gaps"),
+            int_div_trunc(
+                dec(F.sum("n_gaps").over(wc)) * 1_000_000, F.sum("n_gaps").over(wt)
+            ).alias("cum_ppm"),
+        )
     )

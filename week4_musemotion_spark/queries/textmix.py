@@ -8,8 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from week4_musemotion_spark.functions.exact import dec, int_div_trunc
+from week4_musemotion_spark.queries.extensions import _lang_id_sql, _quality_e4_sql
 from week4_musemotion_spark.queries.registry import query
-from week4_musemotion_spark.queries.extensions import _quality_e4_sql
 from week4_musemotion_spark.sources.tables import load_table
 
 #: A bigram is "covered" when the corpus contains it at least this
@@ -434,3 +435,99 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1); at production widths the scan parallelizes itself
     tok = d.select(F.explode(tokens(F.col("text"))).alias("term"))
     return heavy_hitters(tok, "term", den=512)
+
+
+@query(
+    "q_stopword_density_by_source",
+    covers=("X-STOPWORD-DENSITY",),
+    oracle="""
+    WITH tok AS (
+        SELECT source,
+               unnest(list_filter(string_split_regex(text, '\\s+'), w -> w != '')) AS term
+        FROM documents
+    ),
+    tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM tok),
+    c AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY term),
+    hh AS (
+        SELECT term FROM c CROSS JOIN tot
+        WHERE cnt >= (CAST(total AS HUGEINT) + 511) // 512
+    )
+    SELECT t.source,
+           CAST(count(*) AS BIGINT) AS n_tokens,
+           CAST(count(h.term) AS BIGINT) AS n_hh,
+           CAST((CAST(count(h.term) AS HUGEINT) * 1000000) // count(*) AS BIGINT) AS hh_ppm
+    FROM tok t LEFT JOIN hh h ON t.term = h.term
+    GROUP BY t.source
+    """,
+)
+def q_stopword_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Boilerplate/stopword saturation per source: the share of each
+    source's token stream made of CORPUS-level heavy-hitter tokens
+    (>= 1/512 of all occurrences — q_heavy_hitters' set).  A source
+    whose hh_ppm sits far above the corpus norm is template/boiler-
+    plate-heavy and a candidate for stronger paragraph dedup; far
+    below suggests tokenizer-hostile text (code, tables).
+
+    Scale: the heavy-hitter set comes from the two-pass MG sketch
+    (broadcast-sized by construction — at most 512 values), so the
+    density pass is ONE scan with a broadcast left join and a
+    |sources|-group aggregate."""
+    from week4_musemotion_spark.functions.text import tokens
+    from week4_musemotion_spark.operators.sketches import heavy_hitters
+
+    d = load_table(spark, sf_dir, "documents")
+    # not spread: token explode + counting is light per input row —
+    # the doc redistribution exchange costs more than it saves here
+    # (round-7 A/B, see SCALING.md)
+    tok = d.select("source", F.explode(tokens(F.col("text"))).alias("term"))
+    hh = heavy_hitters(tok.select("term"), "term", den=512).select("term").withColumn(
+        "is_hh", F.lit(1)
+    )
+    n_hh = F.sum(F.coalesce(F.col("is_hh"), F.lit(0))).cast("long")
+    return (
+        tok.join(F.broadcast(hh), "term", "left")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_tokens"),
+            n_hh.alias("n_hh"),
+            int_div_trunc(dec(n_hh) * 1_000_000, F.count(F.lit(1))).alias("hh_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Language confusion matrix (declared vs detected)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "q_lang_confusion",
+    covers=("X-LANG-CONFUSION",),
+    oracle=f"""
+    WITH p AS ({_lang_id_sql()})
+    SELECT declared_lang, lang_pred,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(marker_hits) AS BIGINT) AS marker_hits
+    FROM p GROUP BY 1, 2
+    """,
+)
+def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Confusion matrix of the corpus's DECLARED language column
+    against the engine's marker-based detector (q_lang_id's exact
+    semantics, shared oracle fragment): off-diagonal cells are
+    mislabeled shards — the audit a multilingual mixing run must
+    pass before trusting the lang column for temperature weights
+    (q_source_mixture rebalances BY lang; feeding it mislabeled
+    docs silently skews the mixture).  marker_hits per cell shows
+    whether a disagreement is confident (many markers for the other
+    language) or evidence-free ('und' rows).
+
+    Plan: the detector is per-row expression work on the scan; the
+    matrix is one |langs|² aggregate."""
+    from week4_musemotion_spark.operators.textstats import lang_id
+
+    p = lang_id(load_table(spark, sf_dir, "documents"))
+    return p.groupBy("declared_lang", "lang_pred").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("marker_hits").cast("long").alias("marker_hits"),
+    )

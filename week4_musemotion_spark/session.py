@@ -34,6 +34,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for the local-mode batteries when
+    ``SPARK_GRAFT_DRIVER_MEMORY`` is unset: 60 % of the host's
+    MemTotal, capped at 16g — local mode runs every executor thread
+    inside the driver JVM, and a fixed 16g overcommits a 16 GB host."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{min(kb * 6 // 10 // 1024, 16 * 1024)}m"
+
+
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply the engine's configuration to any SparkSession builder.
 
